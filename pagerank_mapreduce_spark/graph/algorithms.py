@@ -12,8 +12,8 @@ Spark-first:
 - iterative fixed points (CC, SSSP, Luby) follow the PageRank loop
   pattern (graph/pagerank.py): driver ``while`` loop over DataFrame
   ops, eager ``localCheckpoint`` per iteration to truncate lineage,
-  scalars-only to the driver, AQE off + shuffle partitions sized to
-  the graph for fixed-shape per-iteration plans.
+  scalars-only to the driver, under ``session.loop_regime`` (AQE off,
+  shuffle partitions sized to the graph) for fixed-shape plans.
 - per-round work is algebraic aggregation (``min``/``count``), never
   ``collect_list`` — map-side partial aggregation keeps power-law
   in/out-degree skew safe, the same reason the PageRank loop avoids
@@ -28,56 +28,26 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_mapreduce_spark.session import checkpoint, loop_regime
 
 
 @contextmanager
-def _loop_confs(
-    df: DataFrame,
-    rows_per_partition: int = 250_000,
-    materialize: bool = True,
-):
-    """AQE off + shuffle partitions sized to the relation, restored on
-    exit — the measured-better regime for fixed-shape iterative plans
-    (see graph/pagerank.py: AQE re-planning was ~30% of iteration
-    wall time at test scale).
-
-    By default (``materialize=True``) the relation is materialized via
-    an eager ``localCheckpoint`` with the sizing row count OBSERVED on
-    that same job — one pass, no separate count action — and the
-    materialized relation is yielded. Callers MUST build the loop from
-    the yielded DataFrame: counting the un-materialized input and then
-    consuming it again would run its pipeline (typically the distinct
-    shuffle inside :func:`symmetrize` / :func:`edge_upper`) twice,
-    one full wasted shuffle pass per algorithm invocation at scale.
-    ``materialize=False`` keeps a plain count probe for inputs that
-    are pure scans/projections with no shuffle above them (SSSP's
-    weighted edge list), where a checkpoint copy buys nothing — there
-    the count is a pruned column scan and the loop's own persist is
-    the materialization point."""
-    spark = df.sparkSession
-    conf = spark.conf
-    saved = {
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-    }
-    if materialize:
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("m")).localCheckpoint()
-        m = obs.get["m"]
-    else:
-        m = df.count()
-    loop_partitions = max(
-        4, min(int(saved["spark.sql.shuffle.partitions"]), m // rows_per_partition + 1)
-    )
-    conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+def _loop_confs(df: DataFrame):
+    """Materialize ``df`` with one eager checkpoint job that also
+    observes its row count, and run the block under
+    :func:`~pagerank_mapreduce_spark.session.loop_regime` sized to that
+    count; the materialized relation is yielded. Callers MUST build
+    the loop from the yielded DataFrame: counting the un-materialized
+    input and then consuming it again would run its pipeline
+    (typically the distinct shuffle inside :func:`symmetrize` /
+    :func:`edge_upper`) twice, one full wasted shuffle pass per
+    algorithm invocation at scale."""
+    df, row = checkpoint(df, F.count(F.lit(1)).alias("m"))
+    with loop_regime(df.sparkSession, row["m"]):
         yield df
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -129,44 +99,44 @@ def connected_components(
     sym = symmetrize(edges)
     with _loop_confs(sym) as sym:
         adj = sym.repartition("src").persist()
-        labels = (
-            adj.select(F.col("src").alias("id"))
-            .unionAll(adj.select(F.col("dst").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("comp"))
-            .localCheckpoint()
-        )
-        for rnd in range(max_iterations):
-            # candidate labels flowing along edges: neighbor's comp
-            flowed = (
-                labels.alias("l")
-                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                .groupBy(F.col("e.dst").alias("id"))
-                .agg(F.min(F.col("l.comp")).alias("nbr_comp"))
+        try:
+            labels = (
+                adj.select(F.col("src").alias("id"))
+                .unionAll(adj.select(F.col("dst").alias("id")))
+                .distinct()
+                .select("id", F.col("id").alias("comp"))
+                .localCheckpoint()
             )
-            merged = (
-                labels.alias("o")
-                .join(flowed.alias("f"), F.col("o.id") == F.col("f.id"), "left")
-                .select(
-                    F.col("o.id").alias("id"),
-                    F.least(
-                        F.col("o.comp"), F.coalesce("f.nbr_comp", F.col("o.comp"))
-                    ).alias("comp"),
-                    (
-                        F.coalesce("f.nbr_comp", F.col("o.comp")) < F.col("o.comp")
-                    ).alias("changed"),
+            for rnd in range(max_iterations):
+                # candidate labels flowing along edges: neighbor's comp
+                flowed = (
+                    labels.alias("l")
+                    .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
+                    .groupBy(F.col("e.dst").alias("id"))
+                    .agg(F.min(F.col("l.comp")).alias("nbr_comp"))
                 )
-            )
-            # change count observed in-flight on the round's ONE job
-            obs = Observation(f"cc_round_{rnd}")
-            merged = merged.observe(
-                obs, F.sum(F.col("changed").cast("int")).alias("n")
-            ).localCheckpoint()
-            changed = obs.get["n"]
-            labels = merged.select("id", "comp")
-            if not changed:
-                break
-        adj.unpersist()
+                merged = (
+                    labels.alias("o")
+                    .join(flowed.alias("f"), F.col("o.id") == F.col("f.id"), "left")
+                    .select(
+                        F.col("o.id").alias("id"),
+                        F.least(
+                            F.col("o.comp"), F.coalesce("f.nbr_comp", F.col("o.comp"))
+                        ).alias("comp"),
+                        (
+                            F.coalesce("f.nbr_comp", F.col("o.comp")) < F.col("o.comp")
+                        ).alias("changed"),
+                    )
+                )
+                # change count observed in-flight on the round's ONE job
+                merged, row = checkpoint(
+                    merged, F.sum(F.col("changed").cast("int")).alias("n")
+                )
+                labels = merged.select("id", "comp")
+                if not row["n"]:
+                    break
+        finally:
+            adj.unpersist()
     return labels
 
 
@@ -199,7 +169,7 @@ def connected_components_star(
     set-difference check before returning."""
     sym = symmetrize(edges)
     with _loop_confs(sym) as sym:
-        # sym is materialized by _loop_confs's one probe job; both
+        # sym is materialized by _loop_confs's one checkpoint job; both
         # derived relations stay LAZY views over its checkpoint blocks
         # — vertices is consumed once (after the loop) and the initial
         # e once (round 0's fused plan), so checkpointing them would
@@ -256,14 +226,13 @@ def connected_components_star(
                 .filter(F.col("u") != F.col("v"))
                 .distinct()
             )
-            obs = Observation(f"cc_star_round_{rnd}")
-            small = small.observe(
-                obs,
+            small, row = checkpoint(
+                small,
                 F.count(F.lit(1)).alias("cnt"),
                 F.sum("u").alias("su"),
                 F.sum("v").alias("sv"),
-            ).localCheckpoint()
-            sig = (obs.get["cnt"], obs.get["su"], obs.get["sv"])
+            )
+            sig = (row["cnt"], row["su"], row["sv"])
             if sig == prev_sig:
                 # signature collision is theoretically possible —
                 # confirm the fixed point exactly (equal counts, so a
@@ -420,89 +389,86 @@ def luby_mis(
             .repartition("a")
             .persist()
         )
-        init_obs = Observation("luby_init")
-        active = (
-            sym.select(F.col("a").alias("id"))
-            .distinct()
-            .observe(init_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        active_n = init_obs.get["n"]
-        # vertices with no neighbor at all never appear in sym; the
-        # caller's vertex universe is the edge endpoints, so isolated
-        # vertices only exist for graphs with self-loops — edge_upper
-        # dropped those, re-add their endpoints as trivially-in-MIS.
-        loops = (
-            edges.filter(F.col("src") == F.col("dst"))
-            .select(F.col("src").alias("id"))
-            .distinct()
-            .join(active, "id", "left_anti")
-        )
-        mis_parts = [loops]
-        for rnd in range(max_iterations):
-            # survivor count observed in-flight on the previous round's
-            # deactivation checkpoint — the emptiness probe costs no
-            # extra job at all (limit(1).count() planned one per round)
-            if active_n == 0:
-                break
-            if priority == "portable":
-                from pagerank_mapreduce_spark.operators.dedup import (
-                    portable_hash60,
-                )
+        try:
+            active, row = checkpoint(
+                sym.select(F.col("a").alias("id")).distinct(),
+                F.count(F.lit(1)).alias("n"),
+            )
+            active_n = row["n"]
+            # vertices with no neighbor at all never appear in sym; the
+            # caller's vertex universe is the edge endpoints, so isolated
+            # vertices only exist for graphs with self-loops — edge_upper
+            # dropped those, re-add their endpoints as trivially-in-MIS.
+            loops = (
+                edges.filter(F.col("src") == F.col("dst"))
+                .select(F.col("src").alias("id"))
+                .distinct()
+                .join(active, "id", "left_anti")
+            )
+            mis_parts = [loops]
+            for rnd in range(max_iterations):
+                # survivor count observed in-flight on the previous round's
+                # deactivation checkpoint — the emptiness probe costs no
+                # extra job at all (limit(1).count() planned one per round)
+                if active_n == 0:
+                    break
+                if priority == "portable":
+                    from pagerank_mapreduce_spark.operators.dedup import (
+                        portable_hash60,
+                    )
 
-                pri_expr = portable_hash60(
-                    F.concat_ws(
-                        ":",
-                        F.col("id").cast("string"),
-                        F.lit(str(seed + rnd)),
+                    pri_expr = portable_hash60(
+                        F.concat_ws(
+                            ":",
+                            F.col("id").cast("string"),
+                            F.lit(str(seed + rnd)),
+                        )
+                    )
+                else:
+                    pri_expr = F.xxhash64("id", F.lit(seed + rnd))
+                pri = active.select("id", pri_expr.alias("p"))
+                # min neighbor priority among ACTIVE neighbors only
+                edges_live = (
+                    sym.join(active.withColumnRenamed("id", "a"), "a")
+                    .join(active.select(F.col("id").alias("b")), "b")
+                )
+                nbr_min = (
+                    pri.alias("q")
+                    .join(edges_live.alias("e"), F.col("q.id") == F.col("e.a"))
+                    .groupBy(F.col("e.b").alias("id"))
+                    .agg(
+                        F.min(F.struct(F.col("q.p"), F.col("q.id").alias("i"))).alias(
+                            "nb"
+                        )
                     )
                 )
-            else:
-                pri_expr = F.xxhash64("id", F.lit(seed + rnd))
-            pri = active.select("id", pri_expr.alias("p"))
-            # min neighbor priority among ACTIVE neighbors only
-            edges_live = (
-                sym.join(active.withColumnRenamed("id", "a"), "a")
-                .join(active.select(F.col("id").alias("b")), "b")
-            )
-            nbr_min = (
-                pri.alias("q")
-                .join(edges_live.alias("e"), F.col("q.id") == F.col("e.a"))
-                .groupBy(F.col("e.b").alias("id"))
-                .agg(
-                    F.min(F.struct(F.col("q.p"), F.col("q.id").alias("i"))).alias(
-                        "nb"
+                winners = (
+                    pri.alias("m")
+                    .join(nbr_min.alias("n"), F.col("m.id") == F.col("n.id"), "left")
+                    .filter(
+                        F.col("n.nb").isNull()  # no active neighbor -> in MIS
+                        | (
+                            F.struct(F.col("m.p"), F.col("m.id").alias("i"))
+                            < F.col("n.nb")
+                        )
                     )
+                    .select(F.col("m.id").alias("id"))
+                    .localCheckpoint()
                 )
-            )
-            winners = (
-                pri.alias("m")
-                .join(nbr_min.alias("n"), F.col("m.id") == F.col("n.id"), "left")
-                .filter(
-                    F.col("n.nb").isNull()  # no active neighbor -> in MIS
-                    | (
-                        F.struct(F.col("m.p"), F.col("m.id").alias("i"))
-                        < F.col("n.nb")
-                    )
+                mis_parts.append(winners)
+                # deactivate winners and their neighbors
+                killed = winners.unionAll(
+                    winners.withColumnRenamed("id", "a")
+                    .join(sym, "a")
+                    .select(F.col("b").alias("id"))
+                ).distinct()
+                active, row = checkpoint(
+                    active.join(killed, "id", "left_anti"),
+                    F.count(F.lit(1)).alias("n"),
                 )
-                .select(F.col("m.id").alias("id"))
-                .localCheckpoint()
-            )
-            mis_parts.append(winners)
-            # deactivate winners and their neighbors
-            killed = winners.unionAll(
-                winners.withColumnRenamed("id", "a")
-                .join(sym, "a")
-                .select(F.col("b").alias("id"))
-            ).distinct()
-            surv_obs = Observation(f"luby_round_{rnd}")
-            active = (
-                active.join(killed, "id", "left_anti")
-                .observe(surv_obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            active_n = surv_obs.get["n"]
-        sym.unpersist()
+                active_n = row["n"]
+        finally:
+            sym.unpersist()
     out = mis_parts[0]
     for part in mis_parts[1:]:
         out = out.unionAll(part)
@@ -597,46 +563,46 @@ def sssp(
     w_edges = edges.select(
         "src", "dst", edge_weight_expr("src", "dst").alias("w")
     )
-    with _loop_confs(w_edges, materialize=False):
+    with loop_regime(w_edges.sparkSession, w_edges.count()):
         adj = w_edges.repartition("src").persist()
-        dists = (
-            adj.sparkSession.range(1)
-            .select(
-                F.lit(source).cast("bigint").alias("id"),
-                F.lit(0).cast("bigint").alias("dist"),
-            )
-            .localCheckpoint()
-        )
-        for rnd in range(max_iterations):
-            relaxed = (
-                dists.alias("d")
-                .join(adj.alias("e"), F.col("d.id") == F.col("e.src"))
-                .groupBy(F.col("e.dst").alias("id"))
-                .agg(F.min(F.col("d.dist") + F.col("e.w")).alias("cand"))
-            )
-            merged = (
-                dists.alias("o")
-                .join(relaxed.alias("r"), F.col("o.id") == F.col("r.id"), "full")
+        try:
+            dists = (
+                adj.sparkSession.range(1)
                 .select(
-                    F.coalesce(F.col("o.id"), F.col("r.id")).alias("id"),
-                    # least() skips nulls: min over whichever side exists
-                    F.least(F.col("o.dist"), F.col("r.cand")).alias("dist"),
-                    (
-                        F.col("o.dist").isNull()
-                        | (F.coalesce(F.col("r.cand"), F.col("o.dist")) < F.col("o.dist"))
-                    ).alias("changed"),
+                    F.lit(source).cast("bigint").alias("id"),
+                    F.lit(0).cast("bigint").alias("dist"),
                 )
+                .localCheckpoint()
             )
-            # change count observed in-flight on the round's ONE job
-            obs = Observation(f"sssp_round_{rnd}")
-            merged = merged.observe(
-                obs, F.sum(F.col("changed").cast("int")).alias("n")
-            ).localCheckpoint()
-            changed = obs.get["n"]
-            dists = merged.select("id", "dist")
-            if not changed:
-                break
-        adj.unpersist()
+            for rnd in range(max_iterations):
+                relaxed = (
+                    dists.alias("d")
+                    .join(adj.alias("e"), F.col("d.id") == F.col("e.src"))
+                    .groupBy(F.col("e.dst").alias("id"))
+                    .agg(F.min(F.col("d.dist") + F.col("e.w")).alias("cand"))
+                )
+                merged = (
+                    dists.alias("o")
+                    .join(relaxed.alias("r"), F.col("o.id") == F.col("r.id"), "full")
+                    .select(
+                        F.coalesce(F.col("o.id"), F.col("r.id")).alias("id"),
+                        # least() skips nulls: min over whichever side exists
+                        F.least(F.col("o.dist"), F.col("r.cand")).alias("dist"),
+                        (
+                            F.col("o.dist").isNull()
+                            | (F.coalesce(F.col("r.cand"), F.col("o.dist")) < F.col("o.dist"))
+                        ).alias("changed"),
+                    )
+                )
+                # change count observed in-flight on the round's ONE job
+                merged, row = checkpoint(
+                    merged, F.sum(F.col("changed").cast("int")).alias("n")
+                )
+                dists = merged.select("id", "dist")
+                if not row["n"]:
+                    break
+        finally:
+            adj.unpersist()
     if max_distance is not None:
         dists = dists.filter(F.col("dist") <= max_distance)
     return dists
@@ -691,7 +657,7 @@ def kcore(
     """
     und = symmetrize(edges)
     with _loop_confs(und) as cur:
-        # cur is materialized by _loop_confs's one probe job. Auto-k
+        # cur is materialized by _loop_confs's one checkpoint job. Auto-k
         # needs (m = rows, n = distinct src) — count_distinct cannot
         # ride an Observation, so instead the probe IS round 0's first
         # degree aggregation: deg0 is checkpointed with (n = its row
@@ -702,24 +668,18 @@ def kcore(
         # un-persisted symmetrize recomputed under each).
         deg0 = None
         if k is None:
-            obs0 = Observation()
-            deg0 = (
-                cur.groupBy("src")
-                .agg(F.count("*").alias("d"))
-                .observe(
-                    obs0,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("d").alias("m"),
-                )
-                .localCheckpoint()
+            deg0, row0 = checkpoint(
+                cur.groupBy("src").agg(F.count("*").alias("d")),
+                F.count(F.lit(1)).alias("n"),
+                F.sum("d").alias("m"),
             )
-            n = obs0.get["n"]
+            n = row0["n"]
             if not n:
                 return cur.select(
                     F.col("src").alias("id"),
                     F.lit(0).cast("bigint").alias("deg"),
                 )
-            k = (int(obs0.get["m"]) + int(n) - 1) // int(n)
+            k = (int(row0["m"]) + int(n) - 1) // int(n)
         prev_m = None
         for rnd in range(max_iterations):
             # TWO peel steps share each checkpoint job: peeling is
@@ -739,10 +699,8 @@ def kcore(
                 nxt = nxt.join(surv, "src", "leftsemi").join(
                     surv.select(F.col("src").alias("dst")), "dst", "leftsemi"
                 )
-            obs = Observation(f"kcore_round_{rnd}")
-            nxt = nxt.observe(obs, F.count("*").alias("m")).localCheckpoint()
-            m = obs.get["m"]
-            cur = nxt
+            cur, row = checkpoint(nxt, F.count("*").alias("m"))
+            m = row["m"]
             # peeling only removes edges: equal count => equal set =>
             # every survivor already has degree >= k
             if m == prev_m or m == 0:
@@ -821,53 +779,55 @@ def label_propagation(
     sym = symmetrize(edges)
     with _loop_confs(sym) as sym:
         adj = sym.repartition("src").persist()
-        labels = (
-            adj.select(F.col("src").alias("id"))
-            .unionAll(adj.select(F.col("dst").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("lbl"))
-            .localCheckpoint()
-        )
-        prev = None
-        for r in range(rounds):
-            if info is not None and r == rounds - 1:
-                # the pre-final generation: at most one round of
-                # recompute above the latest checkpoint when the
-                # probe below consumes it a second time
-                prev = labels
-            cnt = (
-                labels.alias("l")
-                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                .groupBy(
-                    F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl")
-                )
-                .agg(F.count("*").alias("n"))
+        try:
+            labels = (
+                adj.select(F.col("src").alias("id"))
+                .unionAll(adj.select(F.col("dst").alias("id")))
+                .distinct()
+                .select("id", F.col("id").alias("lbl"))
+                .localCheckpoint()
             )
-            best = cnt.groupBy("id").agg(
-                F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
-                    "b"
+            prev = None
+            for r in range(rounds):
+                if info is not None and r == rounds - 1:
+                    # the pre-final generation: at most one round of
+                    # recompute above the latest checkpoint when the
+                    # probe below consumes it a second time
+                    prev = labels
+                cnt = (
+                    labels.alias("l")
+                    .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
+                    .groupBy(
+                        F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl")
+                    )
+                    .agg(F.count("*").alias("n"))
                 )
-            )
-            labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
-            # fixed rounds need no per-round convergence probe, so
-            # two rounds share each checkpoint job (measured best of
-            # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
-            # deeper fusion loses to plan depth, same curve as kcore)
-            if (r + 1) % 2 == 0 or r == rounds - 1:
-                labels = labels.localCheckpoint()
-        if info is not None:
-            changed = rounds  # no-rounds edge: vacuously converged
-            if prev is not None:
-                changed = (
-                    labels.alias("a")
-                    .join(prev.alias("b"), F.col("a.id") == F.col("b.id"))
-                    .filter(F.col("a.lbl") != F.col("b.lbl"))
-                    .count()
+                best = cnt.groupBy("id").agg(
+                    F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
+                        "b"
+                    )
                 )
-            info["rounds_used"] = rounds
-            info["changed_last_round"] = changed if prev is not None else 0
-            info["converged"] = prev is None or changed == 0
-        adj.unpersist()
+                labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
+                # fixed rounds need no per-round convergence probe, so
+                # two rounds share each checkpoint job (measured best of
+                # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
+                # deeper fusion loses to plan depth, same curve as kcore)
+                if (r + 1) % 2 == 0 or r == rounds - 1:
+                    labels = labels.localCheckpoint()
+            if info is not None:
+                changed = rounds  # no-rounds edge: vacuously converged
+                if prev is not None:
+                    changed = (
+                        labels.alias("a")
+                        .join(prev.alias("b"), F.col("a.id") == F.col("b.id"))
+                        .filter(F.col("a.lbl") != F.col("b.lbl"))
+                        .count()
+                    )
+                info["rounds_used"] = rounds
+                info["changed_last_round"] = changed if prev is not None else 0
+                info["converged"] = prev is None or changed == 0
+        finally:
+            adj.unpersist()
     return labels.select("id", F.col("lbl").alias("comm"))
 
 
@@ -934,36 +894,37 @@ def core_numbers(
     sym = symmetrize(edges)
     with _loop_confs(sym) as sym:
         adj = sym.repartition("src").persist()
-        c = (
-            adj.groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint()
-        )
-        h_of = F.array_max(
-            F.transform(
-                F.sort_array(F.collect_list("cn"), asc=False),
-                lambda x, i: F.least(x, i + F.lit(1)),
+        try:
+            c = (
+                adj.groupBy(F.col("src").alias("id"))
+                .agg(F.count(F.lit(1)).alias("c"))
+                .localCheckpoint()
             )
-        )
-        prev_sum = None
-        rounds_used, converged = rounds, False
-        for r in range(rounds):
-            nb = c.alias("l").join(
-                adj.alias("e"), F.col("l.id") == F.col("e.src")
-            ).select(F.col("e.dst").alias("id"), F.col("l.c").alias("cn"))
-            c = nb.groupBy("id").agg(h_of.alias("c"))
-            if (r + 1) % 2 == 0 or r == rounds - 1:
-                obs = Observation(f"core_round_{r}")
-                c = c.observe(obs, F.sum("c").alias("s")).localCheckpoint()
-                s = obs.get["s"]
-                if s == prev_sum:
-                    # values are per-vertex non-increasing, so an
-                    # unchanged SUM since the last probe proves an
-                    # unchanged VECTOR — exact fixpoint, not a hash
-                    rounds_used, converged = r + 1, True
-                    break
-                prev_sum = s
-        adj.unpersist()
+            h_of = F.array_max(
+                F.transform(
+                    F.sort_array(F.collect_list("cn"), asc=False),
+                    lambda x, i: F.least(x, i + F.lit(1)),
+                )
+            )
+            prev_sum = None
+            rounds_used, converged = rounds, False
+            for r in range(rounds):
+                nb = c.alias("l").join(
+                    adj.alias("e"), F.col("l.id") == F.col("e.src")
+                ).select(F.col("e.dst").alias("id"), F.col("l.c").alias("cn"))
+                c = nb.groupBy("id").agg(h_of.alias("c"))
+                if (r + 1) % 2 == 0 or r == rounds - 1:
+                    c, row = checkpoint(c, F.sum("c").alias("s"))
+                    s = row["s"]
+                    if s == prev_sum:
+                        # values are per-vertex non-increasing, so an
+                        # unchanged SUM since the last probe proves an
+                        # unchanged VECTOR — exact fixpoint, not a hash
+                        rounds_used, converged = r + 1, True
+                        break
+                    prev_sum = s
+        finally:
+            adj.unpersist()
     if info is not None:
         info["rounds_used"] = rounds_used
         info["converged"] = converged
@@ -1069,7 +1030,6 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                     .groupBy(F.col("e.dst").alias("id"))
                     .agg(F.min(F.col("s.c")).alias("cin"))
                 )
-                obs = Observation()
                 c2 = (
                     c.alias("x")
                     .join(upd.alias("u"), "id", "left")
@@ -1083,10 +1043,10 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                         ),
                     )
                 )
-                c2 = c2.observe(
-                    obs, F.sum(F.col("_chg").cast("long")).alias("n")
-                ).localCheckpoint()
-                changed = obs.get["n"]
+                c2, row = checkpoint(
+                    c2, F.sum(F.col("_chg").cast("long")).alias("n")
+                )
+                changed = row["n"]
                 c = c2.select("id", "c")
                 if not changed:
                     break
@@ -1118,7 +1078,6 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                     .select(F.col("s.id").alias("id"))
                     .distinct()
                 )
-                obs = Observation()
                 st2 = (
                     st.alias("x")
                     .join(
@@ -1135,10 +1094,10 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                         F.coalesce("_n", F.lit(False)).alias("_chg"),
                     )
                 )
-                st2 = st2.observe(
-                    obs, F.sum(F.col("_chg").cast("long")).alias("n")
-                ).localCheckpoint()
-                grew = obs.get["n"]
+                st2, row = checkpoint(
+                    st2, F.sum(F.col("_chg").cast("long")).alias("n")
+                )
+                grew = row["n"]
                 st = st2.select("id", "c", "m")
                 if not grew:
                     break
@@ -1584,9 +1543,8 @@ def ktruss(
                 .withColumn("s", F.coalesce(F.col("s"), F.lit(0)))
                 .filter(F.col("s") >= k - 2)
             )
-            obs = Observation(f"ktruss_round_{rnd}")
-            nxt = keep.observe(obs, F.count(F.lit(1)).alias("m")).localCheckpoint()
-            m = obs.get["m"]
+            nxt, row = checkpoint(keep, F.count(F.lit(1)).alias("m"))
+            m = row["m"]
             if m == prev_m or m == 0:
                 return nxt.select(
                     "a", "b", F.col("s").cast("bigint").alias("support")
@@ -2246,117 +2204,117 @@ def betweenness_sampled(
         verts = (
             adj.select(F.col("src").alias("id")).distinct().persist()
         )
-        # seed derived IN-PLAN from verts: the previous
-        # collect + createDataFrame + localCheckpoint round trip cost
-        # a driver action plus ~1.5 s of local-relation checkpoint
-        # overhead (measured, round 14) for four rows — and a driver
-        # hop a 100-TB posture never needs; same rows, same schema
-        seed = (
-            verts.orderBy("id").limit(n_sources)
-            .select(
-                F.col("id").alias("s"),
-                F.col("id").alias("v"),
-                F.lit(0).alias("d"),
-                F.lit(1).cast("bigint").alias("sig"),
-            )
-            .localCheckpoint()
-        )
-        # `levels[d]` holds ONLY level d's rows, checkpointed once;
-        # `visited` is a LAZY union over those frames. The r9 shape
-        # re-checkpointed the full union every level — O(depth·S·V)
-        # checkpoint I/O and block-manager storage for a relation
-        # that is the repo's largest intermediate at 100×. Each row
-        # is now written exactly once (total S·V), the anti-join
-        # reads the same rows either way, and the backward phase
-        # indexes levels directly instead of re-filtering the union.
-        #
-        # NOT fused two-levels-per-job (round 14): advancing level
-        # d+2 inside level d+1's checkpoint job (with the d+1
-        # subtree persisted or recomputed) was implemented and
-        # measured +1.3-2.1 s per entry at sf0.1 in matched-regime
-        # A/Bs — the fused job re-scans the visited union an extra
-        # time and doubles plan depth, which costs more than the
-        # saved job launch, and at scale the fused shape's work is
-        # strictly >= the unfused loop's. One level per job stays.
-        levels = [seed]
-        visited = seed
-        frontier = seed
-        depth = 0
-
-        def _expand(fr, vis, d):
-            return (
-                fr.join(adj, fr["v"] == adj["src"])
-                .select("s", F.col("dst").alias("v"), "sig")
-                .groupBy("s", "v")
-                .agg(F.sum("sig").alias("sig"))
-                .join(vis.select("s", "v"), ["s", "v"], "left_anti")
-                .select("s", "v", F.lit(d).alias("d"), "sig")
-            )
-
-        while depth < max_depth:
-            nxt = _expand(frontier, visited, depth + 1)
-            obs = Observation(f"bc_fwd_{depth}")
-            nxt = nxt.observe(obs, F.count(F.lit(1)).alias("m"))
-            nxt = nxt.localCheckpoint()
-            if obs.get["m"] == 0:
-                break
-            frontier = nxt
-            levels.append(nxt)
-            visited = visited.unionByName(nxt)
-            depth += 1
-        # backward: deepest level has no successors -> delta 0
-        delta = frontier.select("s", "v", F.lit(0.0).alias("delta"))
-        acc = delta
-        for lvl in range(depth - 1, -1, -1):
-            cur = levels[lvl]
-            below = (
-                levels[lvl + 1]
-                .join(delta, ["s", "v"])
+        try:
+            # seed derived IN-PLAN from verts: the previous
+            # collect + createDataFrame + localCheckpoint round trip cost
+            # a driver action plus ~1.5 s of local-relation checkpoint
+            # overhead (measured, round 14) for four rows — and a driver
+            # hop a 100-TB posture never needs; same rows, same schema
+            seed = (
+                verts.orderBy("id").limit(n_sources)
                 .select(
-                    "s",
-                    F.col("v").alias("_w"),
-                    (F.lit(1.0) + F.col("delta")).alias("_t"),
-                    F.col("sig").alias("_wsig"),
-                )
-            )
-            contrib = (
-                cur.join(adj, cur["v"] == adj["src"])
-                .select("s", "v", "sig", F.col("dst").alias("_w"))
-                .join(below, ["s", "_w"])
-                .groupBy("s", "v")
-                .agg(
-                    F.sum(
-                        F.col("sig")
-                        / F.col("_wsig").cast("double")
-                        * F.col("_t")
-                    ).alias("delta")
-                )
-            )
-            delta = (
-                cur.select("s", "v")
-                .join(contrib, ["s", "v"], "left")
-                .select(
-                    "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                    F.col("id").alias("s"),
+                    F.col("id").alias("v"),
+                    F.lit(0).alias("d"),
+                    F.lit(1).cast("bigint").alias("sig"),
                 )
                 .localCheckpoint()
             )
-            acc = acc.unionByName(delta)
-        bc = (
-            acc.filter(F.col("v") != F.col("s"))
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum("delta").alias("_b"))
-        )
-        out = (
-            verts.join(bc, "id", "left")
-            .select(
-                "id",
-                F.round(F.coalesce("_b", F.lit(0.0)), 6).alias("bc"),
+            # `levels[d]` holds ONLY level d's rows, checkpointed once;
+            # `visited` is a LAZY union over those frames. The r9 shape
+            # re-checkpointed the full union every level — O(depth·S·V)
+            # checkpoint I/O and block-manager storage for a relation
+            # that is the repo's largest intermediate at 100×. Each row
+            # is now written exactly once (total S·V), the anti-join
+            # reads the same rows either way, and the backward phase
+            # indexes levels directly instead of re-filtering the union.
+            #
+            # NOT fused two-levels-per-job (round 14): advancing level
+            # d+2 inside level d+1's checkpoint job (with the d+1
+            # subtree persisted or recomputed) was implemented and
+            # measured +1.3-2.1 s per entry at sf0.1 in matched-regime
+            # A/Bs — the fused job re-scans the visited union an extra
+            # time and doubles plan depth, which costs more than the
+            # saved job launch, and at scale the fused shape's work is
+            # strictly >= the unfused loop's. One level per job stays.
+            levels = [seed]
+            visited = seed
+            frontier = seed
+            depth = 0
+
+            def _expand(fr, vis, d):
+                return (
+                    fr.join(adj, fr["v"] == adj["src"])
+                    .select("s", F.col("dst").alias("v"), "sig")
+                    .groupBy("s", "v")
+                    .agg(F.sum("sig").alias("sig"))
+                    .join(vis.select("s", "v"), ["s", "v"], "left_anti")
+                    .select("s", "v", F.lit(d).alias("d"), "sig")
+                )
+
+            while depth < max_depth:
+                nxt = _expand(frontier, visited, depth + 1)
+                nxt, row = checkpoint(nxt, F.count(F.lit(1)).alias("m"))
+                if row["m"] == 0:
+                    break
+                frontier = nxt
+                levels.append(nxt)
+                visited = visited.unionByName(nxt)
+                depth += 1
+            # backward: deepest level has no successors -> delta 0
+            delta = frontier.select("s", "v", F.lit(0.0).alias("delta"))
+            acc = delta
+            for lvl in range(depth - 1, -1, -1):
+                cur = levels[lvl]
+                below = (
+                    levels[lvl + 1]
+                    .join(delta, ["s", "v"])
+                    .select(
+                        "s",
+                        F.col("v").alias("_w"),
+                        (F.lit(1.0) + F.col("delta")).alias("_t"),
+                        F.col("sig").alias("_wsig"),
+                    )
+                )
+                contrib = (
+                    cur.join(adj, cur["v"] == adj["src"])
+                    .select("s", "v", "sig", F.col("dst").alias("_w"))
+                    .join(below, ["s", "_w"])
+                    .groupBy("s", "v")
+                    .agg(
+                        F.sum(
+                            F.col("sig")
+                            / F.col("_wsig").cast("double")
+                            * F.col("_t")
+                        ).alias("delta")
+                    )
+                )
+                delta = (
+                    cur.select("s", "v")
+                    .join(contrib, ["s", "v"], "left")
+                    .select(
+                        "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                    )
+                    .localCheckpoint()
+                )
+                acc = acc.unionByName(delta)
+            bc = (
+                acc.filter(F.col("v") != F.col("s"))
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.sum("delta").alias("_b"))
             )
-        )
-        # materialize before the persists drop out of scope
-        out = out.localCheckpoint()
-        adj.unpersist()
-        verts.unpersist()
+            out = (
+                verts.join(bc, "id", "left")
+                .select(
+                    "id",
+                    F.round(F.coalesce("_b", F.lit(0.0)), 6).alias("bc"),
+                )
+            )
+            # materialize before the persists drop out of scope
+            out = out.localCheckpoint()
+        finally:
+            adj.unpersist()
+            verts.unpersist()
     return out
 
 
@@ -2450,60 +2408,60 @@ def harmonic_sampled(
     with _loop_confs(sym) as sym:
         adj = sym.repartition("src").persist()
         verts = adj.select(F.col("src").alias("id")).distinct().persist()
-        # seed derived in-plan from verts (no collect/createDataFrame
-        # round trip) — see betweenness_sampled
-        seed = (
-            verts.orderBy("id").limit(n_sources)
-            .select(
-                F.col("id").alias("s"),
-                F.col("id").alias("v"),
-                F.lit(0).alias("d"),
+        try:
+            # seed derived in-plan from verts (no collect/createDataFrame
+            # round trip) — see betweenness_sampled
+            seed = (
+                verts.orderBy("id").limit(n_sources)
+                .select(
+                    F.col("id").alias("s"),
+                    F.col("id").alias("v"),
+                    F.lit(0).alias("d"),
+                )
+                .localCheckpoint()
             )
-            .localCheckpoint()
-        )
-        # lazy union over once-checkpointed level frames — same
-        # O(depth·S·V) → O(S·V) checkpoint-storage fix as
-        # betweenness_sampled (the two share the frontier shape; the
-        # two-levels-per-job fusion was measured slower there and is
-        # likewise not applied here)
-        visited = seed
-        frontier = seed
-        depth = 0
+            # lazy union over once-checkpointed level frames — same
+            # O(depth·S·V) → O(S·V) checkpoint-storage fix as
+            # betweenness_sampled (the two share the frontier shape; the
+            # two-levels-per-job fusion was measured slower there and is
+            # likewise not applied here)
+            visited = seed
+            frontier = seed
+            depth = 0
 
-        def _expand(fr, vis, d):
-            return (
-                fr.join(adj, fr["v"] == adj["src"])
-                .select("s", F.col("dst").alias("v"))
-                .distinct()
-                .join(vis.select("s", "v"), ["s", "v"], "left_anti")
-                .withColumn("d", F.lit(d))
-            )
+            def _expand(fr, vis, d):
+                return (
+                    fr.join(adj, fr["v"] == adj["src"])
+                    .select("s", F.col("dst").alias("v"))
+                    .distinct()
+                    .join(vis.select("s", "v"), ["s", "v"], "left_anti")
+                    .withColumn("d", F.lit(d))
+                )
 
-        while depth < max_depth:
-            nxt = _expand(frontier, visited, depth + 1)
-            obs = Observation(f"hc_fwd_{depth}")
-            nxt = nxt.observe(obs, F.count(F.lit(1)).alias("m"))
-            nxt = nxt.localCheckpoint()
-            if obs.get["m"] == 0:
-                break
-            frontier = nxt
-            visited = visited.unionByName(nxt)
-            depth += 1
-        h = (
-            visited.filter(F.col("d") > 0)
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum(F.lit(1.0) / F.col("d")).alias("_h"))
-        )
-        out = (
-            verts.join(h, "id", "left")
-            .select(
-                "id",
-                F.round(F.coalesce("_h", F.lit(0.0)), 6).alias("harmonic"),
+            while depth < max_depth:
+                nxt = _expand(frontier, visited, depth + 1)
+                nxt, row = checkpoint(nxt, F.count(F.lit(1)).alias("m"))
+                if row["m"] == 0:
+                    break
+                frontier = nxt
+                visited = visited.unionByName(nxt)
+                depth += 1
+            h = (
+                visited.filter(F.col("d") > 0)
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.sum(F.lit(1.0) / F.col("d")).alias("_h"))
             )
-            .localCheckpoint()
-        )
-        adj.unpersist()
-        verts.unpersist()
+            out = (
+                verts.join(h, "id", "left")
+                .select(
+                    "id",
+                    F.round(F.coalesce("_h", F.lit(0.0)), 6).alias("harmonic"),
+                )
+                .localCheckpoint()
+            )
+        finally:
+            adj.unpersist()
+            verts.unpersist()
     return out
 
 
@@ -2588,54 +2546,56 @@ def ppr_multi(
         # pagerank loop's links relation: only the rank side moves
         # each iteration
         adj = ed.join(deg, "src").repartition("src").persist()
-        verts = (
-            ed.select(F.col("src").alias("id"))
-            .unionByName(ed.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        sources = [
-            r["id"] for r in verts.orderBy("id").limit(n_sources).collect()
-        ]
-        ranks = spark.createDataFrame(
-            [(s, s, 1.0) for s in sources], "s long, v long, r double"
-        ).localCheckpoint()
-        tele = spark.createDataFrame(
-            [(s, s, om) for s in sources], "s long, v long, r double"
-        ).localCheckpoint()
-        for it in range(n_iters):
-            spread = (
-                ranks.join(adj, ranks["v"] == adj["src"], "left")
-                .select(
-                    "s",
-                    # dangling row (no out-edges): the whole α·r mass
-                    # teleports home to the source
-                    F.coalesce(F.col("dst"), F.col("s")).alias("_v"),
-                    F.when(
-                        F.col("dst").isNull(), F.lit(alpha) * F.col("r")
+        try:
+            verts = (
+                ed.select(F.col("src").alias("id"))
+                .unionByName(ed.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+            sources = [
+                r["id"] for r in verts.orderBy("id").limit(n_sources).collect()
+            ]
+            ranks = spark.createDataFrame(
+                [(s, s, 1.0) for s in sources], "s long, v long, r double"
+            ).localCheckpoint()
+            tele = spark.createDataFrame(
+                [(s, s, om) for s in sources], "s long, v long, r double"
+            ).localCheckpoint()
+            for it in range(n_iters):
+                spread = (
+                    ranks.join(adj, ranks["v"] == adj["src"], "left")
+                    .select(
+                        "s",
+                        # dangling row (no out-edges): the whole α·r mass
+                        # teleports home to the source
+                        F.coalesce(F.col("dst"), F.col("s")).alias("_v"),
+                        F.when(
+                            F.col("dst").isNull(), F.lit(alpha) * F.col("r")
+                        )
+                        .otherwise(
+                            F.lit(alpha) * F.col("r") / F.col("_deg")
+                        )
+                        .alias("r"),
                     )
-                    .otherwise(
-                        F.lit(alpha) * F.col("r") / F.col("_deg")
-                    )
-                    .alias("r"),
+                    .withColumnRenamed("_v", "v")
                 )
-                .withColumnRenamed("_v", "v")
-            )
-            ranks = (
-                spread.unionByName(tele)
-                .groupBy("s", "v")
-                .agg(F.sum("r").alias("r"))
-            )
-            # checkpoint every 4th (and the last) iteration: each
-            # eager localCheckpoint is a full job, and a 4-deep
-            # join+agg lineage still analyzes in O(1) — unlike the
-            # pagerank loop there are no per-iteration scalars to
-            # observe, so nothing else forces a job per step. With
-            # the src-prepartitioned adj this took the 20 iterations
-            # 7.3 → 6.0 s at sf0.1 (the stages themselves remain; only
-            # job-submission overhead amortizes)
-            if it % 4 == 3 or it == n_iters - 1:
-                ranks = ranks.localCheckpoint()
-        adj.unpersist()
+                ranks = (
+                    spread.unionByName(tele)
+                    .groupBy("s", "v")
+                    .agg(F.sum("r").alias("r"))
+                )
+                # checkpoint every 4th (and the last) iteration: each
+                # eager localCheckpoint is a full job, and a 4-deep
+                # join+agg lineage still analyzes in O(1) — unlike the
+                # pagerank loop there are no per-iteration scalars to
+                # observe, so nothing else forces a job per step. With
+                # the src-prepartitioned adj this took the 20 iterations
+                # 7.3 → 6.0 s at sf0.1 (the stages themselves remain; only
+                # job-submission overhead amortizes)
+                if it % 4 == 3 or it == n_iters - 1:
+                    ranks = ranks.localCheckpoint()
+        finally:
+            adj.unpersist()
         return ranks.select(
             "s", "v", F.round("r", round_digits).alias("rank")
         )

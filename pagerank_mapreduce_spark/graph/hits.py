@@ -33,17 +33,20 @@ Scale design (100 TB stance) — mirrors graph/pagerank.py:
 - **One job per iteration** (plus one final authority job): the fused
   a-then-h plan materializes via ``localCheckpoint`` with the L1
   normalizer observed in-flight; the driver sees scalars only.
-- **Loop confs**: AQE off + shuffle partitions sized to the graph
+- **Loop regime**: ``session.loop_regime`` sized to the edge count
   while iterating, restored on exit — the measured-better regime for
-  fixed-shape iterative plans (the round-6 _loop_confs lesson; the
-  first formulation of this loop ran 40 un-tuned jobs and was 10x
-  slower at sf0.1 than the pagerank loop it sits next to).
+  fixed-shape iterative plans (the first formulation of this loop ran
+  40 un-tuned jobs and was 10x slower at sf0.1 than the pagerank loop
+  it sits next to).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_mapreduce_spark.graph.pagerank import _graph_size
+from pagerank_mapreduce_spark.session import checkpoint, loop_regime
 
 HITS_ITERATIONS = 20
 
@@ -113,37 +116,11 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
+    # websize + loop-sizing count: the pagerank pre-loop job
+    n, m = _graph_size(edges, num_vertices)
     spark = edges.sparkSession
-    # websize + loop-sizing count fused into ONE aggregate job (the
-    # graph/pagerank.py pre-loop fusion; values unchanged)
-    if num_vertices is not None:
-        n = num_vertices
-        m = edges.count()
-    else:
-        _row = edges.agg(
-            (F.greatest(F.max("src"), F.max("dst")) + 1).alias("n"),
-            F.count(F.lit(1)).alias("m"),
-        ).first()
-        n = int(_row["n"]) if _row["n"] is not None else 0
-        m = int(_row["m"])
-    if n <= 0:
-        raise ValueError("empty graph")
-
-    conf = spark.conf
-    saved = {
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-    }
-    try:
-        loop_partitions = max(
-            4, min(int(saved["spark.sql.shuffle.partitions"]), m // 250_000 + 1)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-        conf.set("spark.sql.adaptive.enabled", "false")
+    with loop_regime(spark, m):
         return _hits_loop(spark, edges, n, iterations)
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
@@ -182,9 +159,8 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
                 .groupBy(F.col("e.src").alias("id"))
                 .agg(F.sum(F.col("a.a_raw")).alias("h_raw"))
             )
-            obs = Observation(f"hits_{it}")
-            h = h.observe(obs, F.sum("h_raw").alias("s")).localCheckpoint()
-            raw = obs.get["s"]
+            h, row = checkpoint(h, F.sum("h_raw").alias("s"))
+            raw = row["s"]
             # None: empty support relation (sum over zero rows);
             # 0.0 is impossible with positive masses but guarded too —
             # either way normalizing would NaN the whole vector
@@ -195,9 +171,8 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
 
         # final authority vector: one extra job from the final hub
         a = a_step(hub)
-        obs_a = Observation("hits_auth")
-        a = a.observe(obs_a, F.sum("a_raw").alias("s")).localCheckpoint()
-        sa = float(obs_a.get["s"])
+        a, row = checkpoint(a, F.sum("a_raw").alias("s"))
+        sa = float(row["s"])
         auth = a.select("id", (F.col("a_raw") / F.lit(sa)).alias("auth"))
     finally:
         by_src.unpersist()

@@ -41,8 +41,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_mapreduce_spark.session import checkpoint, loop_regime
 
 ALPHA = 0.85  # mr-pr-cpp.cpp:11
 CONVERGENCE = 1e-5  # mr-pr-cpp.cpp:12
@@ -185,6 +187,23 @@ class PageRankResult:
     diffs: list[float] = field(default_factory=list)
 
 
+def _graph_size(edges: DataFrame, num_vertices: int | None) -> tuple[int, int]:
+    """``(websize, edge count)`` for the pagerank and hits loops in ONE
+    aggregate job over the edge relation; raises on an empty graph."""
+    if num_vertices is not None:
+        n, m = num_vertices, edges.count()
+    else:
+        row = edges.agg(
+            (F.greatest(F.max("src"), F.max("dst")) + 1).alias("n"),
+            F.count(F.lit(1)).alias("m"),
+        ).first()
+        n = int(row["n"]) if row["n"] is not None else 0
+        m = int(row["m"])
+    if n <= 0:
+        raise ValueError("empty graph")
+    return n, m
+
+
 def pagerank(
     edges: DataFrame,
     alpha: float = ALPHA,
@@ -203,22 +222,7 @@ def pagerank(
     global path's expressions are untouched when None. The set is
     embedded as an ``isin`` literal — the common small-seed-set case;
     a million-vertex seed set would want a broadcast-join variant."""
-    spark = edges.sparkSession
-    # websize and the loop-sizing edge count ride ONE aggregate job
-    # (they were two separate full scans of the edge relation; the
-    # values are unchanged — greatest(max,max)+1 and count(*))
-    if num_vertices is not None:
-        n = num_vertices
-        m = edges.count()
-    else:
-        _row = edges.agg(
-            (F.greatest(F.max("src"), F.max("dst")) + 1).alias("n"),
-            F.count(F.lit(1)).alias("m"),
-        ).first()
-        n = int(_row["n"]) if _row["n"] is not None else 0
-        m = int(_row["m"])
-    if n <= 0:
-        raise ValueError("empty graph")
+    n, m = _graph_size(edges, num_vertices)
     if personalize is not None:
         seeds = set(personalize)
         if not seeds:
@@ -231,30 +235,15 @@ def pagerank(
                 f"personalize ids outside [0, {n}): {sorted(bad)[:5]}"
             )
 
-    # Size the loop's shuffle to the graph, not the session default:
-    # every iteration is join+agg+join over the same relations, so a
-    # partition count tuned once pays off every iteration. The session
-    # conf (cluster capacity) is the ceiling; ~250k edges per partition
-    # the target; 4 the floor. AQE is disabled inside the loop — the
-    # per-iteration plans are tiny and fixed-shape, and AQE's per-stage
-    # re-planning latency dominates them (measured ~30% of iteration
-    # wall time at test scale). Both settings are restored on exit.
-    conf = spark.conf
-    saved = {
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-    }
-    loop_partitions = max(4, min(int(saved["spark.sql.shuffle.partitions"]), m // 250_000 + 1))
-    conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # the loop's shuffle is sized to the graph's edge count (policy:
+    # session.loop_regime); every iteration is join+agg+join over the
+    # same relations, so one partition count pays off every iteration
+    spark = edges.sparkSession
+    with loop_regime(spark, m):
         return _pagerank_loop(
             spark, edges, n, alpha, convergence, max_iterations, personalize,
             weight_col,
         )
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 def _pagerank_loop(
@@ -297,117 +286,113 @@ def _pagerank_loop(
         .persist()
     )
 
-    # init e1: pr[0] = 1 (mr-pr-cpp.cpp:128). Vertex 0's out-degree —
-    # needed for the pre-loop dangling mass below — rides the
-    # checkpoint job as an Observation, like the in-loop stats: no
-    # separate driver action.
-    init_obs = Observation("pr_init")
-    if tele_ids is None:
-        init_rank = (
-            F.when(F.col("id") == 0, F.lit(1.0)).otherwise(F.lit(0.0))
-        )
-        init_metric = F.sum(
-            F.when(F.col("id") == 0, F.col("deg"))
-        ).alias("deg0")
-    else:
-        # personalized init: uniform over the seed set
-        init_rank = (
-            F.when(F.col("id").isin(tele_ids), F.lit(tele_w))
-            .otherwise(F.lit(0.0))
-        )
-        init_metric = F.sum(
-            F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
-        ).alias("dangling0")
-    pr = (
-        vdeg.select("id", "deg", init_rank.alias("rank"))
-        .observe(init_obs, init_metric)
-        .localCheckpoint()
-    )
-
-    # Pre-loop stats of the init vector: sum = 1 (iteration 0 runs
-    # un-normalized anyway); dangling mass rides the checkpoint job.
-    sum_pr = 1.0
-    if tele_ids is None:
-        dangling_pr = 1.0 if init_obs.get["deg0"] == 0 else 0.0
-    else:
-        dangling_pr = float(init_obs.get["dangling0"])
-
-    one_Iv = (1.0 - alpha) / n
-    diff = float("inf")
-    diffs: list[float] = []
-    iterations = 0
-
-    while diff > convergence and iterations < max_iterations:
-        # Iteration 0 uses the raw vector; later iterations normalize
-        # the previous vector to sum 1 (mr-pr-cpp.cpp:139-147). The
-        # dangling term uses the PRE-normalization mass, exactly as the
-        # reference does (mr-pr-cpp.cpp:132-138,155).
-        norm = 1.0 if iterations == 0 else sum_pr
-        one_Av = alpha * dangling_pr / n
-        _h = alpha * F.coalesce(F.col("c.h_raw"), F.lit(0.0)) / norm
+    try:
+        # init e1: pr[0] = 1 (mr-pr-cpp.cpp:128). Vertex 0's out-degree —
+        # needed for the pre-loop dangling mass below — rides the
+        # checkpoint job as an Observation, like the in-loop stats: no
+        # separate driver action.
         if tele_ids is None:
-            _new_rank = _h + one_Av + one_Iv
+            init_rank = (
+                F.when(F.col("id") == 0, F.lit(1.0)).otherwise(F.lit(0.0))
+            )
+            init_metric = F.sum(
+                F.when(F.col("id") == 0, F.col("deg"))
+            ).alias("deg0")
         else:
-            # dangling + teleport mass both flow to the seed set; the
-            # association order mirrors the oracle's SQL exactly
-            _tele = (
-                F.when(F.col("q.id").isin(tele_ids), F.lit(tele_w))
+            # personalized init: uniform over the seed set
+            init_rank = (
+                F.when(F.col("id").isin(tele_ids), F.lit(tele_w))
                 .otherwise(F.lit(0.0))
             )
-            _new_rank = (
-                _h + (alpha * dangling_pr) * _tele + (1.0 - alpha) * _tele
-            )
+            init_metric = F.sum(
+                F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+            ).alias("dangling0")
+        pr, init_row = checkpoint(
+            vdeg.select("id", "deg", init_rank.alias("rank")), init_metric
+        )
 
-        # h[i] = sum_{j -> i} old[j]/outdeg[j]; normalization is a
-        # scalar, so it is applied after the aggregate (h_raw / norm).
-        # Qualified aliases throughout: contribs is derived from pr, so
-        # the merge below is a self-join from the analyzer's view.
-        if weight_col is None:
-            _contrib = F.col("p.rank") / F.col("l.deg")
+        # Pre-loop stats of the init vector: sum = 1 (iteration 0 runs
+        # un-normalized anyway); dangling mass rides the checkpoint job.
+        sum_pr = 1.0
+        if tele_ids is None:
+            dangling_pr = 1.0 if init_row["deg0"] == 0 else 0.0
         else:
-            # association mirrors the oracle: rank * w / deg
-            _contrib = F.col("p.rank") * F.col("l.w") / F.col("l.deg")
-        contribs = (
-            pr.alias("p")
-            .join(links.alias("l"), F.col("p.id") == F.col("l.src"))
-            .groupBy(F.col("l.dst").alias("cid"))
-            .agg(F.sum(_contrib).alias("h_raw"))
-        )
-        merged = (
-            pr.alias("q")
-            .join(contribs.alias("c"), F.col("q.id") == F.col("c.cid"), "left")
-            .select(
-                F.col("q.id").alias("id"),
-                F.col("q.deg").alias("deg"),
-                (F.col("q.rank") / norm).alias("old_rank"),
-                _new_rank.alias("new_rank"),
-            )
-        )
-        # Observation metrics piggyback on the checkpoint job, so each
-        # iteration runs exactly ONE job: the eager localCheckpoint
-        # materializes the new vector (truncating lineage so plan
-        # analysis stays O(1) over thousands of iterations) while the
-        # convergence scalars are collected in-flight — no second scan
-        # of the vector. (A persist-based variant was tried and
-        # rejected: the self-join lineage defeats cache reuse and each
-        # iteration silently recomputes the whole chain.)
-        obs = Observation(f"pr_iter_{iterations}")
-        merged = merged.observe(
-            obs,
-            F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))).alias("diff"),
-            F.sum("new_rank").alias("s"),
-            F.sum(F.when(F.col("deg") == 0, F.col("new_rank")).otherwise(0.0)).alias(
-                "d"
-            ),
-        ).localCheckpoint()
-        row = obs.get
-        diff, sum_pr, dangling_pr = float(row["diff"]), float(row["s"]), float(row["d"])
-        diffs.append(diff)
-        pr = merged.select("id", "deg", F.col("new_rank").alias("rank"))
-        iterations += 1
+            dangling_pr = float(init_row["dangling0"])
 
-    links.unpersist()
-    vdeg.unpersist()
+        one_Iv = (1.0 - alpha) / n
+        diff = float("inf")
+        diffs: list[float] = []
+        iterations = 0
+
+        while diff > convergence and iterations < max_iterations:
+            # Iteration 0 uses the raw vector; later iterations normalize
+            # the previous vector to sum 1 (mr-pr-cpp.cpp:139-147). The
+            # dangling term uses the PRE-normalization mass, exactly as the
+            # reference does (mr-pr-cpp.cpp:132-138,155).
+            norm = 1.0 if iterations == 0 else sum_pr
+            one_Av = alpha * dangling_pr / n
+            _h = alpha * F.coalesce(F.col("c.h_raw"), F.lit(0.0)) / norm
+            if tele_ids is None:
+                _new_rank = _h + one_Av + one_Iv
+            else:
+                # dangling + teleport mass both flow to the seed set; the
+                # association order mirrors the oracle's SQL exactly
+                _tele = (
+                    F.when(F.col("q.id").isin(tele_ids), F.lit(tele_w))
+                    .otherwise(F.lit(0.0))
+                )
+                _new_rank = (
+                    _h + (alpha * dangling_pr) * _tele + (1.0 - alpha) * _tele
+                )
+
+            # h[i] = sum_{j -> i} old[j]/outdeg[j]; normalization is a
+            # scalar, so it is applied after the aggregate (h_raw / norm).
+            # Qualified aliases throughout: contribs is derived from pr, so
+            # the merge below is a self-join from the analyzer's view.
+            if weight_col is None:
+                _contrib = F.col("p.rank") / F.col("l.deg")
+            else:
+                # association mirrors the oracle: rank * w / deg
+                _contrib = F.col("p.rank") * F.col("l.w") / F.col("l.deg")
+            contribs = (
+                pr.alias("p")
+                .join(links.alias("l"), F.col("p.id") == F.col("l.src"))
+                .groupBy(F.col("l.dst").alias("cid"))
+                .agg(F.sum(_contrib).alias("h_raw"))
+            )
+            merged = (
+                pr.alias("q")
+                .join(contribs.alias("c"), F.col("q.id") == F.col("c.cid"), "left")
+                .select(
+                    F.col("q.id").alias("id"),
+                    F.col("q.deg").alias("deg"),
+                    (F.col("q.rank") / norm).alias("old_rank"),
+                    _new_rank.alias("new_rank"),
+                )
+            )
+            # Observation metrics piggyback on the checkpoint job, so each
+            # iteration runs exactly ONE job: the eager localCheckpoint
+            # materializes the new vector (truncating lineage so plan
+            # analysis stays O(1) over thousands of iterations) while the
+            # convergence scalars are collected in-flight — no second scan
+            # of the vector. (A persist-based variant was tried and
+            # rejected: the self-join lineage defeats cache reuse and each
+            # iteration silently recomputes the whole chain.)
+            merged, row = checkpoint(
+                merged,
+                F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))).alias("diff"),
+                F.sum("new_rank").alias("s"),
+                F.sum(
+                    F.when(F.col("deg") == 0, F.col("new_rank")).otherwise(0.0)
+                ).alias("d"),
+            )
+            diff, sum_pr, dangling_pr = float(row["diff"]), float(row["s"]), float(row["d"])
+            diffs.append(diff)
+            pr = merged.select("id", "deg", F.col("new_rank").alias("rank"))
+            iterations += 1
+    finally:
+        links.unpersist()
+        vdeg.unpersist()
     return PageRankResult(
         ranks=pr.select("id", "rank"),
         iterations=iterations,

@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pagerank_mapreduce_spark.session import loop_regime
+
 __all__ = [
     "random_walks",
     "random_walks_oracle_sql",
@@ -100,27 +102,11 @@ def random_walks(
     if walks_per_vertex < 1:
         raise ValueError("walks_per_vertex must be >= 1")
 
-    # loop confs (the graph-suite discipline): AQE off + shuffle
-    # partitions sized to the edge relation while stepping, restored
-    # on exit — per-step plans are tiny and fixed-shape, AQE re-plan
-    # latency dominates them at every scale below huge
-    spark = edges.sparkSession
-    conf = spark.conf
-    saved = {
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-    }
-    try:
-        m = edges.count()
-        loop_partitions = max(
-            4, min(int(saved["spark.sql.shuffle.partitions"]), m // 250_000 + 1)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-        conf.set("spark.sql.adaptive.enabled", "false")
+    # the graph-suite loop regime, sized to the edge relation: per-step
+    # plans are tiny and fixed-shape, AQE re-plan latency dominates
+    # them at every scale below huge
+    with loop_regime(edges.sparkSession, edges.count()):
         return _walks_loop(edges, walk_length, walks_per_vertex, seed)
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 def _walks_loop(
@@ -252,25 +238,10 @@ def node2vec_walks(
         raise ValueError("walks_per_vertex must be >= 1")
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be positive")
-    spark = edges.sparkSession
-    conf = spark.conf
-    saved = {
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-    }
-    try:
-        m = edges.count()
-        loop_partitions = max(
-            4, min(int(saved["spark.sql.shuffle.partitions"]), m // 250_000 + 1)
-        )
-        conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-        conf.set("spark.sql.adaptive.enabled", "false")
+    with loop_regime(edges.sparkSession, edges.count()):
         return _node2vec_loop(
             edges, walk_length, walks_per_vertex, seed, float(p), float(q)
         )
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 def _node2vec_loop(

@@ -18,8 +18,6 @@ embedded as literals — deterministic across runs and engines.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,62 +32,13 @@ from pagerank_mapreduce_spark.functions.vectors import (
     sqdist,
     sqdist_sql,
 )
+from pagerank_mapreduce_spark.session import loop_regime
 
 
 def _vec_sql(vec_col: str) -> str:
     """``vec_col`` as an ARRAY<DOUBLE> SQL fragment (the string twin
     of ``F.col(vec_col).cast("array<double>")``)."""
     return f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-
-
-# nesting depth per SparkSession for _trainer_conf: composed trainers
-# (ivfpq_lloyd_build runs the coarse and PQ trainers under one scope,
-# spread_sample inside pq_lloyd_build under another) must not restore
-# AQE mid-trainer, and two overlapping scopes must restore the value
-# saved by the OUTERMOST one (r13 ADVICE: the flat save/restore was
-# non-reentrant). Keyed by id(session); driver loops are
-# single-threaded per session — concurrent queries on one session
-# would still see AQE off while a trainer runs, which is the
-# documented session-global trade-off.
-_TRAINER_CONF_DEPTH: dict[int, tuple[int, str]] = {}
-
-
-@contextmanager
-def _trainer_conf(spark):
-    """Codebook-trainer job regime (the pagerank-loop precedent):
-    AQE off for the duration of the trainer's driver loop, restored
-    on exit. Every in-trainer action is a tiny CONSTANT-SHAPE
-    aggregate whose output is codebook-sized (k×dim rows) regardless
-    of input scale, so AQE's per-stage re-planning and extra shuffle
-    materialization add latency (measured ~1.2 s per collect on the
-    sf0.1 fixture) and can never help — the shuffle it would coalesce
-    carries at most maps×k×dim partially-aggregated rows. (Whole-stage
-    codegen was also tried here and in the graph loops and measured a
-    wash in interleaved A/Bs — not kept.) The final returned
-    DataFrames are lazy and execute AFTER restore, so probe/scan
-    plans still get AQE.
-
-    Reentrant per session (nesting counter): only the outermost scope
-    saves and restores, so nested trainer scopes can never restore a
-    stale value or re-enable AQE mid-trainer. NOT thread-safe — the
-    assumption (true everywhere in this repo) is one single-threaded
-    driver loop per SparkSession."""
-    conf = spark.conf
-    key = id(spark)
-    depth, saved = _TRAINER_CONF_DEPTH.get(key, (0, ""))
-    if depth == 0:
-        saved = conf.get("spark.sql.adaptive.enabled")
-        conf.set("spark.sql.adaptive.enabled", "false")
-    _TRAINER_CONF_DEPTH[key] = (depth + 1, saved)
-    try:
-        yield
-    finally:
-        depth, saved = _TRAINER_CONF_DEPTH[key]
-        if depth == 1:
-            conf.set("spark.sql.adaptive.enabled", saved)
-            del _TRAINER_CONF_DEPTH[key]
-        else:
-            _TRAINER_CONF_DEPTH[key] = (depth - 1, saved)
 
 
 def cosine_topk(
@@ -512,7 +461,7 @@ def spread_sample(
     short codebook."""
     from pyspark.sql import Window
 
-    with _trainer_conf(embeddings.sparkSession):
+    with loop_regime(embeddings.sparkSession):
         return _spread_sample_jobs(embeddings, n, vec_col, id_col, Window)
 
 
@@ -521,8 +470,12 @@ def _spread_sample_jobs(
 ) -> list:
     """:func:`spread_sample`'s two bounded jobs (histogram with the
     fused range probe, then the targeted-bucket ranking), run under
-    the trainer conf regime (tiny constant-shape aggregates — see
-    :func:`_trainer_conf`)."""
+    :func:`~pagerank_mapreduce_spark.session.loop_regime`. Like every
+    codebook trainer's action they are tiny constant-shape aggregates
+    with codebook-sized output, so AQE's re-planning only adds
+    latency (measured ~1.2 s per collect on the sf0.1 fixture); the
+    DataFrames a trainer returns are lazy and run after the regime
+    exits, with AQE."""
     n_fine = 4096
     # the (lo, hi, count) range probe rides the histogram job as a
     # broadcast scalar subquery (round 14, pass fusion): the fine
@@ -1270,7 +1223,7 @@ def pq_lloyd_build(
             for s in range(n_sub)
         ]
     v_sql = _vec_sql(vec_col)
-    with _trainer_conf(embeddings.sparkSession):
+    with loop_regime(embeddings.sparkSession):
         for _ in range(iters):
             per_sub = []
             for s in range(n_sub):
@@ -1470,7 +1423,7 @@ def lloyd_build(
         # cosine: e is already normalized, so the sample rows are the
         # unit init centroids directly (same literals the oracle gets)
         centroids = [[float(x) for x in r["_v"]] for r in rows]
-    with _trainer_conf(spark):
+    with loop_regime(spark):
         for _ in range(iters):
             assigned = assign_nearest_centroid(
                 e, centroids, "_v", "list_id", assignment

@@ -4,13 +4,26 @@ The reference engines hand-tune page sizes, spill paths and all-to-all
 flow control (MR-MPI doc/settings.txt); on Spark the equivalents are
 AQE, shuffle-partition sizing and Arrow-batched Python interop, set
 once here so every entry point (tests, bench, driver) agrees.
+
+Driver loops run under :func:`loop_regime` and materialize each
+iteration through :func:`checkpoint`; the regime policy lives only
+here. AQE is off while a loop runs: its per-stage re-planning
+dominates small fixed-shape iteration plans (~30% of PageRank
+iteration wall time at test scale). Sized by a row count, a loop's
+shuffle partitions are ``max(4, min(session, rows // 250_000 + 1))``
+— ~250k rows each, the session value as ceiling, 4 as floor — and
+the floor wins over the ceiling: a ``local[2]`` session (2
+partitions) loops at 4. Both keys are restored on exit, on error
+too, and nested scopes unwind in LIFO order. Like any SQL conf the
+regime is session-global.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -69,6 +82,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) reads as int64 (sources/tables.py converts);
+        # set once so a column's type never depends on read order
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # bound plan-string rendering: an interrupted streaming
@@ -97,3 +113,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_AQE = "spark.sql.adaptive.enabled"
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def loop_regime(spark: SparkSession, rows: int | None = None):
+    """Run a driver loop with AQE off and, given ``rows``, shuffle
+    partitions sized to it (policy in the module doc); both keys are
+    restored on exit."""
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in (_AQE, _PARTITIONS)}
+    try:
+        conf.set(_AQE, "false")
+        if rows is not None:
+            ceiling = int(saved[_PARTITIONS])
+            conf.set(_PARTITIONS, str(max(4, min(ceiling, rows // 250_000 + 1))))
+        yield
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
+def checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, Row]:
+    """Materialize ``df`` with an eager ``localCheckpoint`` and return
+    it with ``metrics`` (aggregate Columns) observed on that same job:
+    one job per loop iteration, lineage truncated, scalars only to the
+    driver."""
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint()
+    return df, obs.get

@@ -32,12 +32,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-        # Spark's reader surfaces as int64 under nanosAsLong) and plain
+        # Spark's reader surfaces as int64: session.get_spark) and plain
         # TIMESTAMP(MICROS). Branch on the dtype actually read: only
         # apply the nanos→micros truncation when ts arrives as int64
         # (DuckDB's TIMESTAMP_NS→TIMESTAMP scan truncates identically);
         # a real timestamp column passes through untouched.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

@@ -26,7 +26,6 @@ def read_events_stream(
     """File-source stream over the events parquet (one file = one
     micro-batch slice). Schema comes from the batch reader; the ts
     column carries the same nanos→micros conversion."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from pyspark.sql.types import LongType
 
     # Derive the on-disk schema from a batch footer read so the stream

@@ -8,7 +8,7 @@ build their expressions and jobs without changing WHAT they compute:
   ``array_position(dists, array_min(dists))``), and grew a SQL-string
   construction path (``nearest_idx_sql``) so trainer loops parse ONE
   expression instead of building py4j Column trees per iteration;
-- the trainers run under ``_trainer_conf`` (AQE off, restored);
+- the trainers run under ``session.loop_regime`` (AQE off, restored);
 - ``int8_topk`` quantizes the query driver-side with arithmetic that
   must stay bit-identical to the engine's ``int8_quantize``
   expression.
@@ -25,11 +25,11 @@ from pyspark.sql import functions as F
 
 from pagerank_mapreduce_spark.operators.similarity import (
     _round_half_up,
-    _trainer_conf,
     int8_quantize,
     nearest_idx,
     nearest_idx_sql,
 )
+from pagerank_mapreduce_spark.session import loop_regime
 
 
 @pytest.fixture(scope="module")
@@ -88,11 +88,11 @@ def test_nearest_idx_matches_double_fold_reference(vec_df):
 
 def test_trainer_conf_restores_aqe_even_on_error(spark):
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    with _trainer_conf(spark):
+    with loop_regime(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     with pytest.raises(RuntimeError):
-        with _trainer_conf(spark):
+        with loop_regime(spark):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
 
@@ -104,16 +104,16 @@ def test_trainer_conf_is_reentrant(spark):
     save/restore re-enabled AQE when an inner scope exited and could
     restore a stale 'false' (r13 ADVICE)."""
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    with _trainer_conf(spark):
-        with _trainer_conf(spark):
+    with loop_regime(spark):
+        with loop_regime(spark):
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         # inner exit must NOT restore yet
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     # error inside the inner scope still unwinds both levels cleanly
     with pytest.raises(RuntimeError):
-        with _trainer_conf(spark):
-            with _trainer_conf(spark):
+        with loop_regime(spark):
+            with loop_regime(spark):
                 raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
 

@@ -31,11 +31,19 @@ SHARDS[C2]="tests/test_determinism.py"
 SHARDENV[C2]="DETERMINISM_SHARD=0/2"
 SHARDS[C3]="tests/test_determinism.py"
 SHARDENV[C3]="DETERMINISM_SHARD=1/2"
-SHARDS[D]="tests/test_text_dedup.py tests/test_asof_range.py tests/test_mapreduce_ops.py tests/test_plan_audit.py tests/test_ranking.py tests/test_packing_decontam.py tests/test_jsonl_source.py tests/test_csv_source.py tests/test_schema_evolution.py tests/test_sinks_bucketed.py tests/test_partitioned.py tests/test_approx_aggregates.py tests/test_fixture_schemas.py tests/test_bucketing.py tests/test_bench_format.py tests/test_orc_source.py"
+SHARDS[D]="tests/test_text_dedup.py tests/test_asof_range.py tests/test_mapreduce_ops.py tests/test_plan_audit.py tests/test_ranking.py tests/test_packing_decontam.py tests/test_jsonl_source.py tests/test_csv_source.py tests/test_schema_evolution.py tests/test_sinks_bucketed.py tests/test_partitioned.py tests/test_approx_aggregates.py tests/test_fixture_schemas.py tests/test_bucketing.py tests/test_bench_format.py tests/test_orc_source.py tests/test_similarity_internals.py tests/test_loop_regime.py"
 SHARDS[E1]="tests/test_pagerank.py"
 SHARDS[E2]="tests/test_graph_algorithms.py"
 
 ALL_SHARDS=(A1 A2 B C1 C2 C3 D E1 E2)
+
+# a test file in no shard would silently drop out of the full gate
+for f in tests/test_*.py; do
+  case " ${SHARDS[*]} " in
+    *" $f "*) ;;
+    *) echo "run_tests.sh: $f is in no shard; add it to SHARDS" >&2; exit 2 ;;
+  esac
+done
 
 if [ $# -ge 1 ]; then
   # shellcheck disable=SC2086
