@@ -13,7 +13,17 @@ Spark-first:
   pattern (graph/pagerank.py): driver ``while`` loop over DataFrame
   ops, eager ``localCheckpoint`` per iteration to truncate lineage,
   scalars-only to the driver, under ``session.loop_regime`` (AQE off,
-  shuffle partitions sized to the graph) for fixed-shape plans.
+  shuffle partitions sized to the graph) for fixed-shape plans. A
+  fixed point that exhausts its ``max_iterations`` cap raises
+  ``RuntimeError`` instead of returning an unconverged result.
+- each building block exists once: :func:`_loop_adjacency` owns the
+  cached symmetric adjacency of every undirected loop and its release,
+  :func:`_bfs_levels` the multi-source BFS (betweenness, harmonic),
+  :func:`_oriented` / :func:`_closed_wedges` the degree-ordered
+  triangle enumeration (triangles, k-truss support), :func:`_wedges`
+  the capped-bucket wedge generator (Adamic-Adar, link prediction),
+  and :func:`_louvain_sweep` the Louvain move (louvain_move is its
+  unit-weight case).
 - per-round work is algebraic aggregation (``min``/``count``), never
   ``collect_list`` — map-side partial aggregation keeps power-law
   in/out-degree skew safe, the same reason the PageRank loop avoids
@@ -27,6 +37,7 @@ Spark-first:
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -73,6 +84,22 @@ def edge_upper(edges: DataFrame) -> DataFrame:
     )
 
 
+@contextmanager
+def _loop_adjacency(edges: DataFrame):
+    """The cached adjacency every undirected loop runs against:
+    :func:`symmetrize` materialized by :func:`_loop_confs` (so the
+    block runs under the sized loop regime), pre-partitioned on
+    ``src`` — each round's join key, so only the per-vertex side
+    moves — and released on exit, also on raise. The relation is
+    symmetric, so its ``src`` column alone is the vertex set."""
+    with _loop_confs(symmetrize(edges)) as sym:
+        adj = sym.repartition("src").persist()
+        try:
+            yield adj
+        finally:
+            adj.unpersist()
+
+
 # ------------------------------------------------ connected components
 
 
@@ -94,49 +121,52 @@ def connected_components(
     SoCC'14) drops that to O(log^2 n) rounds at the cost of mutating
     the edge set each round; label propagation keeps the edge relation
     immutable and cache-resident, which wins on the typical short-
-    diameter web/social graphs PageRank targets.
+    diameter web/social graphs PageRank targets. Rounds are capped at
+    ``max_iterations``; a graph whose diameter exceeds the cap raises
+    ``RuntimeError`` rather than returning split components — use
+    :func:`connected_components_star` for long-diameter graphs.
     """
-    sym = symmetrize(edges)
-    with _loop_confs(sym) as sym:
-        adj = sym.repartition("src").persist()
-        try:
-            labels = (
-                adj.select(F.col("src").alias("id"))
-                .unionAll(adj.select(F.col("dst").alias("id")))
-                .distinct()
-                .select("id", F.col("id").alias("comp"))
-                .localCheckpoint()
+    with _loop_adjacency(edges) as adj:
+        labels = (
+            adj.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("comp"))
+            .localCheckpoint()
+        )
+        for rnd in range(max_iterations):
+            # candidate labels flowing along edges: neighbor's comp
+            flowed = (
+                labels.alias("l")
+                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
+                .groupBy(F.col("e.dst").alias("id"))
+                .agg(F.min(F.col("l.comp")).alias("nbr_comp"))
             )
-            for rnd in range(max_iterations):
-                # candidate labels flowing along edges: neighbor's comp
-                flowed = (
-                    labels.alias("l")
-                    .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                    .groupBy(F.col("e.dst").alias("id"))
-                    .agg(F.min(F.col("l.comp")).alias("nbr_comp"))
+            merged = (
+                labels.alias("o")
+                .join(flowed.alias("f"), F.col("o.id") == F.col("f.id"), "left")
+                .select(
+                    F.col("o.id").alias("id"),
+                    F.least(
+                        F.col("o.comp"), F.coalesce("f.nbr_comp", F.col("o.comp"))
+                    ).alias("comp"),
+                    (
+                        F.coalesce("f.nbr_comp", F.col("o.comp")) < F.col("o.comp")
+                    ).alias("changed"),
                 )
-                merged = (
-                    labels.alias("o")
-                    .join(flowed.alias("f"), F.col("o.id") == F.col("f.id"), "left")
-                    .select(
-                        F.col("o.id").alias("id"),
-                        F.least(
-                            F.col("o.comp"), F.coalesce("f.nbr_comp", F.col("o.comp"))
-                        ).alias("comp"),
-                        (
-                            F.coalesce("f.nbr_comp", F.col("o.comp")) < F.col("o.comp")
-                        ).alias("changed"),
-                    )
-                )
-                # change count observed in-flight on the round's ONE job
-                merged, row = checkpoint(
-                    merged, F.sum(F.col("changed").cast("int")).alias("n")
-                )
-                labels = merged.select("id", "comp")
-                if not row["n"]:
-                    break
-        finally:
-            adj.unpersist()
+            )
+            # change count observed in-flight on the round's ONE job
+            merged, row = checkpoint(
+                merged, F.sum(F.col("changed").cast("int")).alias("n")
+            )
+            labels = merged.select("id", "comp")
+            if not row["n"]:
+                break
+        else:
+            raise RuntimeError(
+                "connected_components: labels still changing after "
+                f"max_iterations={max_iterations} rounds; raise the cap "
+                "or use connected_components_star for long-diameter graphs"
+            )
     return labels
 
 
@@ -294,15 +324,30 @@ def triangles(edges: DataFrame) -> DataFrame:
     # into the cache build). The only shuffle of the O(m^1.5) wedge
     # relation itself is the unavoidable closing-join key change.
     und = edge_upper(edges).persist()  # (a < b), deduped
-    deg = (
+    tri = _closed_wedges(und, _oriented(und).persist()).select(
+        F.array_sort(F.array("x", "y", "z")).alias("t")
+    )
+    return tri.select(
+        F.col("t")[0].alias("v1"), F.col("t")[1].alias("v2"), F.col("t")[2].alias("v3")
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """Degree per vertex of a canonical (a < b) edge list: (v, deg)."""
+    return (
         und.select(F.col("a").alias("v"))
         .unionAll(und.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("deg"))
     )
-    # orient a->b iff (deg(a), a) < (deg(b), b)
+
+
+def _oriented(und: DataFrame) -> DataFrame:
+    """Degree ordering of a canonical edge list: each edge as (lo, hi),
+    oriented from its lower-(degree, id) endpoint."""
+    deg = _degrees(und)
     da, db = deg.alias("da"), deg.alias("db")
-    oriented = (
+    return (
         und.join(da, und["a"] == F.col("da.v"))
         .join(db, und["b"] == F.col("db.v"))
         .select(
@@ -315,8 +360,14 @@ def triangles(edges: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.lo", "e.hi")
-        .persist()
     )
+
+
+def _closed_wedges(und: DataFrame, oriented: DataFrame) -> DataFrame:
+    """Every triangle of ``und`` exactly once, as (x, y, z): x the
+    wedge center, y < z its two oriented out-neighbors. ``oriented``
+    is :func:`_oriented` of ``und`` (cached or not, the caller's
+    choice)."""
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     wedges = w1.join(w2, F.col("w1.lo") == F.col("w2.lo")).filter(
         F.col("w1.hi") < F.col("w2.hi")
@@ -325,17 +376,13 @@ def triangles(edges: DataFrame) -> DataFrame:
     # w1.hi < w2.hi by id, so the canonical (a < b) edge list matches
     # with a pure EQUI-join — an OR-of-orientations predicate here
     # would force a nested-loop join, unusable at scale
-    closed = wedges.join(
+    return wedges.join(
         und.alias("c"),
         (F.col("c.a") == F.col("w1.hi")) & (F.col("c.b") == F.col("w2.hi")),
-    )
-    tri = closed.select(
-        F.array_sort(
-            F.array(F.col("w1.lo"), F.col("w1.hi"), F.col("w2.hi"))
-        ).alias("t")
-    )
-    return tri.select(
-        F.col("t")[0].alias("v1"), F.col("t")[1].alias("v2"), F.col("t")[2].alias("v3")
+    ).select(
+        F.col("w1.lo").alias("x"),
+        F.col("w1.hi").alias("y"),
+        F.col("w2.hi").alias("z"),
     )
 
 
@@ -467,6 +514,11 @@ def luby_mis(
                     F.count(F.lit(1)).alias("n"),
                 )
                 active_n = row["n"]
+            if active_n:
+                raise RuntimeError(
+                    f"luby_mis: {active_n} vertices still undecided after "
+                    f"max_iterations={max_iterations} rounds"
+                )
         finally:
             sym.unpersist()
     out = mis_parts[0]
@@ -601,6 +653,11 @@ def sssp(
                 dists = merged.select("id", "dist")
                 if not row["n"]:
                     break
+            else:
+                raise RuntimeError(
+                    "sssp: distances still improving after "
+                    f"max_iterations={max_iterations} rounds"
+                )
         finally:
             adj.unpersist()
     if max_distance is not None:
@@ -706,6 +763,11 @@ def kcore(
             if m == prev_m or m == 0:
                 break
             prev_m = m
+        else:
+            raise RuntimeError(
+                f"kcore: still peeling after max_iterations={max_iterations} "
+                "rounds"
+            )
     return cur.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("bigint").alias("deg")
     )
@@ -776,58 +838,52 @@ def label_propagation(
     winner via ``max(struct(n, -label))``, which partial-aggregates
     map-side; no window, no per-vertex label list. Hubs are big
     groups, not big rows."""
-    sym = symmetrize(edges)
-    with _loop_confs(sym) as sym:
-        adj = sym.repartition("src").persist()
-        try:
-            labels = (
-                adj.select(F.col("src").alias("id"))
-                .unionAll(adj.select(F.col("dst").alias("id")))
-                .distinct()
-                .select("id", F.col("id").alias("lbl"))
-                .localCheckpoint()
+    with _loop_adjacency(edges) as adj:
+        labels = (
+            adj.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("lbl"))
+            .localCheckpoint()
+        )
+        prev = None
+        for r in range(rounds):
+            if info is not None and r == rounds - 1:
+                # the pre-final generation: at most one round of
+                # recompute above the latest checkpoint when the
+                # probe below consumes it a second time
+                prev = labels
+            cnt = (
+                labels.alias("l")
+                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
+                .groupBy(
+                    F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl")
+                )
+                .agg(F.count("*").alias("n"))
             )
-            prev = None
-            for r in range(rounds):
-                if info is not None and r == rounds - 1:
-                    # the pre-final generation: at most one round of
-                    # recompute above the latest checkpoint when the
-                    # probe below consumes it a second time
-                    prev = labels
-                cnt = (
-                    labels.alias("l")
-                    .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                    .groupBy(
-                        F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl")
-                    )
-                    .agg(F.count("*").alias("n"))
+            best = cnt.groupBy("id").agg(
+                F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
+                    "b"
                 )
-                best = cnt.groupBy("id").agg(
-                    F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
-                        "b"
-                    )
+            )
+            labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
+            # fixed rounds need no per-round convergence probe, so
+            # two rounds share each checkpoint job (measured best of
+            # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
+            # deeper fusion loses to plan depth, same curve as kcore)
+            if (r + 1) % 2 == 0 or r == rounds - 1:
+                labels = labels.localCheckpoint()
+        if info is not None:
+            changed = rounds  # no-rounds edge: vacuously converged
+            if prev is not None:
+                changed = (
+                    labels.alias("a")
+                    .join(prev.alias("b"), F.col("a.id") == F.col("b.id"))
+                    .filter(F.col("a.lbl") != F.col("b.lbl"))
+                    .count()
                 )
-                labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
-                # fixed rounds need no per-round convergence probe, so
-                # two rounds share each checkpoint job (measured best of
-                # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
-                # deeper fusion loses to plan depth, same curve as kcore)
-                if (r + 1) % 2 == 0 or r == rounds - 1:
-                    labels = labels.localCheckpoint()
-            if info is not None:
-                changed = rounds  # no-rounds edge: vacuously converged
-                if prev is not None:
-                    changed = (
-                        labels.alias("a")
-                        .join(prev.alias("b"), F.col("a.id") == F.col("b.id"))
-                        .filter(F.col("a.lbl") != F.col("b.lbl"))
-                        .count()
-                    )
-                info["rounds_used"] = rounds
-                info["changed_last_round"] = changed if prev is not None else 0
-                info["converged"] = prev is None or changed == 0
-        finally:
-            adj.unpersist()
+            info["rounds_used"] = rounds
+            info["changed_last_round"] = changed if prev is not None else 0
+            info["converged"] = prev is None or changed == 0
     return labels.select("id", F.col("lbl").alias("comm"))
 
 
@@ -891,40 +947,35 @@ def core_numbers(
     desc-sorted neighbor-value array as ``max_i min(c_(i), i+1)`` —
     a hub of degree d carries a d-element array exactly like the
     wedge generators, never a window over the whole graph."""
-    sym = symmetrize(edges)
-    with _loop_confs(sym) as sym:
-        adj = sym.repartition("src").persist()
-        try:
-            c = (
-                adj.groupBy(F.col("src").alias("id"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .localCheckpoint()
+    with _loop_adjacency(edges) as adj:
+        c = (
+            adj.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("c"))
+            .localCheckpoint()
+        )
+        h_of = F.array_max(
+            F.transform(
+                F.sort_array(F.collect_list("cn"), asc=False),
+                lambda x, i: F.least(x, i + F.lit(1)),
             )
-            h_of = F.array_max(
-                F.transform(
-                    F.sort_array(F.collect_list("cn"), asc=False),
-                    lambda x, i: F.least(x, i + F.lit(1)),
-                )
-            )
-            prev_sum = None
-            rounds_used, converged = rounds, False
-            for r in range(rounds):
-                nb = c.alias("l").join(
-                    adj.alias("e"), F.col("l.id") == F.col("e.src")
-                ).select(F.col("e.dst").alias("id"), F.col("l.c").alias("cn"))
-                c = nb.groupBy("id").agg(h_of.alias("c"))
-                if (r + 1) % 2 == 0 or r == rounds - 1:
-                    c, row = checkpoint(c, F.sum("c").alias("s"))
-                    s = row["s"]
-                    if s == prev_sum:
-                        # values are per-vertex non-increasing, so an
-                        # unchanged SUM since the last probe proves an
-                        # unchanged VECTOR — exact fixpoint, not a hash
-                        rounds_used, converged = r + 1, True
-                        break
-                    prev_sum = s
-        finally:
-            adj.unpersist()
+        )
+        prev_sum = None
+        rounds_used, converged = rounds, False
+        for r in range(rounds):
+            nb = c.alias("l").join(
+                adj.alias("e"), F.col("l.id") == F.col("e.src")
+            ).select(F.col("e.dst").alias("id"), F.col("l.c").alias("cn"))
+            c = nb.groupBy("id").agg(h_of.alias("c"))
+            if (r + 1) % 2 == 0 or r == rounds - 1:
+                c, row = checkpoint(c, F.sum("c").alias("s"))
+                s = row["s"]
+                if s == prev_sum:
+                    # values are per-vertex non-increasing, so an
+                    # unchanged SUM since the last probe proves an
+                    # unchanged VECTOR — exact fixpoint, not a hash
+                    rounds_used, converged = r + 1, True
+                    break
+                prev_sum = s
     if info is not None:
         info["rounds_used"] = rounds_used
         info["converged"] = converged
@@ -1225,36 +1276,16 @@ def rectangles_sql(edges_sql: str) -> str:
 # ------------------------------------------ link prediction (round 8)
 
 
-def adamic_adar(
-    edges: DataFrame,
-    max_center_degree: int | None = None,
-    exclude_edges: bool = True,
-) -> DataFrame:
-    """Adamic-Adar link-prediction scores: for every non-adjacent
-    vertex pair (u, w) with at least one common neighbor,
-
-        score(u, w) = sum over v in N(u) ∩ N(w) of 1 / ln(deg(v))
-
-    (Adamic & Adar 2003) — the classic "friends-of-friends, rare
-    mutual friends count more" recommender. Output (u, w, score),
-    u < w, score rounded to 6.
-
-    Scale shape: wedges through each center v are the in-bucket pair
-    explosion over v's sorted neighbor array (the house capped-bucket
-    generator — no neighbor×neighbor join). A hub of degree d emits
-    C(d, 2) pairs, so ``max_center_degree`` drops hot centers whole
-    with an observed drop metric; that truncation is principled here,
-    a hub's contribution 1/ln(d) is precisely the one that matters
-    least. Degree-1 centers generate nothing, so ln(deg) is never
-    ln(1) = 0. The final per-pair sum is algebraic (map-side partial
-    aggregation); ``exclude_edges`` anti-joins the canonical edge
-    list so only genuinely new links are proposed."""
+def _wedges(und: DataFrame, max_center_degree: int | None) -> DataFrame:
+    """Every wedge u - v - w (u < w) of a canonical edge list, as
+    (u, w, d) with d = deg(v) of the center: the in-bucket pair
+    explosion over each center's sorted neighbor array (the house
+    capped-bucket generator — no neighbor×neighbor join). A hub of
+    degree d emits C(d, 2) pairs, so centers above
+    ``max_center_degree`` are dropped whole with an observed drop
+    metric. Degree-1 centers emit nothing."""
     from pagerank_mapreduce_spark.operators.dedup import hot_bucket_guard
 
-    # three consumers (both adj union branches + the anti-join) would
-    # each recompute the dedup shuffle — measured 4x end-to-end at
-    # sf0.1 without the persist (same rationale as triangles())
-    und = edge_upper(edges).persist()
     adj = und.select(
         F.col("a").alias("v"), F.col("b").alias("n")
     ).unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
@@ -1264,7 +1295,7 @@ def adamic_adar(
         .filter(F.size("ns") >= 2)
     )
     nbrs = hot_bucket_guard(nbrs, max_center_degree, "ns")
-    wedges = nbrs.select(
+    return nbrs.select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -1280,8 +1311,38 @@ def adamic_adar(
                 )
             )
         ).alias("p"),
-        (F.lit(1.0) / F.log(F.size("ns"))).alias("c"),
-    ).select("p.u", "p.w", "c")
+        F.size("ns").alias("d"),
+    ).select("p.u", "p.w", "d")
+
+
+def adamic_adar(
+    edges: DataFrame,
+    max_center_degree: int | None = None,
+    exclude_edges: bool = True,
+) -> DataFrame:
+    """Adamic-Adar link-prediction scores: for every non-adjacent
+    vertex pair (u, w) with at least one common neighbor,
+
+        score(u, w) = sum over v in N(u) ∩ N(w) of 1 / ln(deg(v))
+
+    (Adamic & Adar 2003) — the classic "friends-of-friends, rare
+    mutual friends count more" recommender. Output (u, w, score),
+    u < w, score rounded to 6.
+
+    Scale shape: wedges come from :func:`_wedges` (no
+    neighbor×neighbor join); its ``max_center_degree`` hub drop is
+    principled here, a hub's contribution 1/ln(d) is precisely the
+    one that matters least. Degree-1 centers generate nothing, so
+    ln(deg) is never ln(1) = 0. The final per-pair sum is algebraic
+    (map-side partial aggregation); ``exclude_edges`` anti-joins the
+    canonical edge list so only genuinely new links are proposed."""
+    # eager localCheckpoint, not persist: both consumers (the wedge
+    # generator and the anti-join) share one materialization, and the
+    # blocks are released when the result is dropped
+    und = edge_upper(edges).localCheckpoint()
+    wedges = _wedges(und, max_center_degree).select(
+        "u", "w", (F.lit(1.0) / F.log("d")).alias("c")
+    )
     scores = wedges.groupBy("u", "w").agg(
         F.round(F.sum("c"), 6).alias("score")
     )
@@ -1339,51 +1400,23 @@ def link_prediction(
                                                  Zhou, Lü & Zhang 2009)
 
     — the three standard baselines next to :func:`adamic_adar`'s
-    1/ln(deg), sharing its exact scale shape: wedges through each
-    common neighbor come from the capped-bucket pair explosion over
-    the center's sorted neighbor array (never a neighbor×neighbor
-    join), a hub of degree d is dropped whole by
-    ``max_center_degree`` (observed drop metric), and the per-pair
-    aggregation is algebraic. The Jaccard denominator is
-    deg(u) + deg(w) − cn via two joins against the |V|-sized degree
-    relation — broadcast-able at fixture scale, an ordinary shuffle
-    join at 100 TB where the pair relation dominates it by orders of
-    magnitude either way. Output (u, w, cn, jaccard, ra), u < w,
+    1/ln(deg), sharing its wedge generator :func:`_wedges` (never a
+    neighbor×neighbor join, hubs above ``max_center_degree`` dropped
+    whole) and its algebraic per-pair aggregation. The Jaccard
+    denominator is deg(u) + deg(w) − cn via two joins against the
+    |V|-sized degree relation — broadcast-able at fixture scale, an
+    ordinary shuffle join at 100 TB where the pair relation dominates
+    it by orders of magnitude either way. Output (u, w, cn, jaccard, ra), u < w,
     existing edges anti-joined away, ratios rounded to 6."""
-    from pagerank_mapreduce_spark.operators.dedup import hot_bucket_guard
-
-    # eager localCheckpoint, not persist: four consumers (adj twice,
-    # the anti-join, the degree relation) share one materialization
-    # and the blocks are released when the result is dropped
+    # eager localCheckpoint, not persist: three consumers (the wedge
+    # generator, the anti-join, the degree relation) share one
+    # materialization and the blocks are released when the result is
+    # dropped
     und = edge_upper(edges).localCheckpoint()
-    adj = und.select(
-        F.col("a").alias("v"), F.col("b").alias("n")
-    ).unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
-    deg = adj.groupBy("v").agg(F.count("*").alias("d"))
-    nbrs = (
-        adj.groupBy("v")
-        .agg(F.array_sort(F.collect_list("n")).alias("ns"))
-        .filter(F.size("ns") >= 2)
+    deg = _degrees(und)
+    wedges = _wedges(und, max_center_degree).select(
+        "u", "w", (F.lit(1.0) / F.col("d")).alias("c")
     )
-    nbrs = hot_bucket_guard(nbrs, max_center_degree, "ns")
-    wedges = nbrs.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ns",
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ns"),
-                            i + 2,
-                            F.greatest(F.size("ns") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(x.alias("u"), y.alias("w")),
-                    ),
-                )
-            )
-        ).alias("p"),
-        (F.lit(1.0) / F.size("ns")).alias("c"),
-    ).select("p.u", "p.w", "c")
     pairs = wedges.groupBy("u", "w").agg(
         F.count("*").cast("bigint").alias("cn"),
         F.round(F.sum("c"), 6).alias("ra"),
@@ -1393,8 +1426,8 @@ def link_prediction(
         (pairs["u"] == und["a"]) & (pairs["w"] == und["b"]),
         "left_anti",
     )
-    du = deg.select(F.col("v").alias("u"), F.col("d").alias("_du"))
-    dw = deg.select(F.col("v").alias("w"), F.col("d").alias("_dw"))
+    du = deg.select(F.col("v").alias("u"), F.col("deg").alias("_du"))
+    dw = deg.select(F.col("v").alias("w"), F.col("deg").alias("_dw"))
     return (
         pairs.join(du, "u")
         .join(dw, "w")
@@ -1453,48 +1486,11 @@ def link_prediction_sql(
 
 def _edge_support(und: DataFrame) -> DataFrame:
     """Triangle count per canonical edge of ``und`` (a < b, deduped):
-    the degree-ordered wedge enumeration of :func:`triangles` inlined
-    WITHOUT its persists — inside the ktruss peel loop the input is
-    already a localCheckpoint, so the caches would only accumulate
-    across rounds. Returns (a, b, s)."""
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    oriented = (
-        und.join(da, und["a"] == F.col("da.v"))
-        .join(db, und["b"] == F.col("db.v"))
-        .select(
-            F.when(
-                (F.col("da.deg") < F.col("db.deg"))
-                | (
-                    (F.col("da.deg") == F.col("db.deg"))
-                    & (F.col("a") < F.col("b"))
-                ),
-                F.struct(F.col("a").alias("lo"), F.col("b").alias("hi")),
-            )
-            .otherwise(
-                F.struct(F.col("b").alias("lo"), F.col("a").alias("hi"))
-            )
-            .alias("e")
-        )
-        .select("e.lo", "e.hi")
-    )
-    w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-    wedges = w1.join(w2, F.col("w1.lo") == F.col("w2.lo")).filter(
-        F.col("w1.hi") < F.col("w2.hi")
-    )
-    tri = wedges.join(
-        und.alias("c"),
-        (F.col("c.a") == F.col("w1.hi")) & (F.col("c.b") == F.col("w2.hi")),
-    ).select(
-        F.col("w1.lo").alias("x"),
-        F.col("w1.hi").alias("y"),
-        F.col("w2.hi").alias("z"),
-    )
+    the degree-ordered enumeration of :func:`triangles` WITHOUT its
+    persists — inside the ktruss peel loop the input is already a
+    localCheckpoint, so the caches would only accumulate across
+    rounds. Returns (a, b, s)."""
+    tri = _closed_wedges(und, _oriented(und))
     pairs = (
         tri.select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
@@ -1627,42 +1623,17 @@ def louvain_move(edges: DataFrame) -> DataFrame:
     stay put — exactly Louvain's behavior on its first visit to a
     hub).
 
-    Scale shape: degree aggregation, one adjacency×degree join
-    (vertex-keyed), one scalar-broadcast gain filter, and one
-    ALGEBRAIC struct-min groupBy for the argmin (map-side partial
-    aggregation; no window, no per-vertex loop). Feed the result to
+    This is :func:`_louvain_sweep` — one level of
+    :func:`louvain_levels` — on the unit-weight graph, where the
+    strength is the degree and the weighted gain 2m·w − S_i·S_j
+    reduces to the criterion above. ``m`` rides the eager checkpoint
+    of the deduped edge list as an observed count, so the sweep gets
+    it as a literal with no extra job. Feed the result to
     :func:`modularity` for the partition quality."""
-    # eager localCheckpoint, not persist: the dedup (and, for R-MAT
-    # entries, the whole generator) has three consumers; checkpoint
-    # storage is released with the result, a persist cache is not
-    und = edge_upper(edges).localCheckpoint()
-    m_row = und.agg(F.count(F.lit(1)).alias("_m"))
-    adj = und.select(
-        F.col("a").alias("v"), F.col("b").alias("n")
-    ).unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
-    deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    dn = deg.select(F.col("v").alias("n"), F.col("d").alias("_dn"))
-    cand = (
-        adj.join(dn, "n")
-        .join(deg.withColumnRenamed("d", "_dv"), "v")
-        .crossJoin(F.broadcast(m_row))
-        .filter(F.col("_dv") * F.col("_dn") < 2 * F.col("_m"))
-        .filter(
-            (F.col("_dn") < F.col("_dv"))
-            | (
-                (F.col("_dn") == F.col("_dv"))
-                & (F.col("n") < F.col("v"))
-            )
-        )
-    )
-    pick = (
-        cand.groupBy("v")
-        .agg(F.min(F.struct(F.col("_dn"), F.col("n"))).alias("_p"))
-        .select("v", F.col("_p.n").alias("_adopt"))
-    )
-    return deg.join(pick, "v", "left").select(
-        F.col("v").alias("id"),
-        F.coalesce(F.col("_adopt"), F.col("v")).alias("comm"),
+    und, row = checkpoint(edge_upper(edges), F.count(F.lit(1)).alias("m"))
+    g = und.select("a", "b", F.lit(1).cast("bigint").alias("w"))
+    return _louvain_sweep(g, _strength(g), row["m"]).select(
+        F.col("v").alias("id"), "comm"
     )
 
 
@@ -2168,6 +2139,60 @@ def modularity_sql(edges_sql: str, communities_sql: str) -> str:
 # -------------------------------------- betweenness (sampled Brandes)
 
 
+@contextmanager
+def _bfs_levels(adj: DataFrame, n_sources: int, max_depth: int):
+    """Multi-source BFS over the cached symmetric adjacency ``adj``
+    from the ``n_sources`` smallest vertex ids, ALL sources advancing
+    in one (s, v)-keyed frontier: per level ONE join against ``adj``,
+    one algebraic shortest-path-count (σ) sum and one anti-join
+    against the visited set, regardless of |S|, in one checkpoint
+    job. Yields ``(verts, levels)``: the persisted vertex set (id),
+    released on exit, and the per-depth frames ``levels[d]`` =
+    (s, v, d, sig) holding ONLY depth d's rows, each checkpointed once.
+
+    The seed is derived IN-PLAN from ``verts``: a collect +
+    createDataFrame + localCheckpoint round trip cost an extra action
+    plus ~1.5 s of local-relation checkpoint overhead (measured) for
+    a handful of rows. The visited set is a LAZY union over the level
+    frames: re-checkpointing the full union every level would cost
+    O(depth·S·V) checkpoint I/O for the largest intermediate; this
+    way each row is written exactly once. Advancing two levels per
+    job was implemented and measured +1.3-2.1 s per entry at sf0.1 —
+    the fused job re-scans the visited union an extra time and
+    doubles plan depth — so one level per job stays."""
+    verts = adj.select(F.col("src").alias("id")).distinct().persist()
+    try:
+        seed = (
+            verts.orderBy("id").limit(n_sources)
+            .select(
+                F.col("id").alias("s"),
+                F.col("id").alias("v"),
+                F.lit(0).alias("d"),
+                F.lit(1).cast("bigint").alias("sig"),
+            )
+            .localCheckpoint()
+        )
+        levels = [seed]
+        visited = seed
+        while len(levels) <= max_depth:
+            nxt = (
+                levels[-1].join(adj, levels[-1]["v"] == adj["src"])
+                .select("s", F.col("dst").alias("v"), "sig")
+                .groupBy("s", "v")
+                .agg(F.sum("sig").alias("sig"))
+                .join(visited.select("s", "v"), ["s", "v"], "left_anti")
+                .select("s", "v", F.lit(len(levels)).alias("d"), "sig")
+            )
+            nxt, row = checkpoint(nxt, F.count(F.lit(1)).alias("m"))
+            if row["m"] == 0:
+                break
+            levels.append(nxt)
+            visited = visited.unionByName(nxt)
+        yield verts, levels
+    finally:
+        verts.unpersist()
+
+
 def betweenness_sampled(
     edges: DataFrame, n_sources: int = 4, max_depth: int = 30
 ) -> DataFrame:
@@ -2183,139 +2208,71 @@ def betweenness_sampled(
     over the canonical undirected graph. Output: (id, bc) for EVERY
     vertex (unreached/terminal vertices at 0), bc rounded to 6.
 
-    Scale shape: the forward phase is a multi-source BFS — ALL
-    sources advance in one frontier relation keyed (s, v), so each
-    level is ONE join against the cached adjacency + one algebraic
-    σ-sum + one anti-join against the visited set, regardless of
-    |S|. The backward phase walks levels deepest-first: per level,
-    one join to the level-below δ relation and one algebraic sum.
-    Rounds are bounded by the BFS depth both ways. The driver holds
-    only the source-id list and the max depth (two constant-size
-    actions); σ stays integral (BIGINT) so the only float work is
+    Scale shape: the forward phase is the multi-source BFS of
+    :func:`_bfs_levels` (one job per level, all sources at once).
+    The backward phase walks levels deepest-first: per level, one
+    join to the level-below δ relation and one algebraic sum.
+    Rounds are bounded by the BFS depth both ways. σ stays integral (BIGINT) so the only float work is
     the final dependency division — the oracle
     (betweenness_oracle_sql) replays the same forward-BFS +
     backward-accumulation quantities as a recursive CTE (O(S·V)
     state), so only float summation order differs; the INDEPENDENT
     check is the Python Brandes re-implementation in
     tests/test_graph_algorithms.py, not the oracle."""
-    sym = symmetrize(edges)
-    with _loop_confs(sym) as sym:
-        adj = sym.repartition("src").persist()
-        verts = (
-            adj.select(F.col("src").alias("id")).distinct().persist()
-        )
-        try:
-            # seed derived IN-PLAN from verts: the previous
-            # collect + createDataFrame + localCheckpoint round trip cost
-            # a driver action plus ~1.5 s of local-relation checkpoint
-            # overhead (measured, round 14) for four rows — and a driver
-            # hop a 100-TB posture never needs; same rows, same schema
-            seed = (
-                verts.orderBy("id").limit(n_sources)
+    with _loop_adjacency(edges) as adj, _bfs_levels(
+        adj, n_sources, max_depth
+    ) as (verts, levels):
+        # backward: deepest level has no successors -> delta 0
+        delta = levels[-1].select("s", "v", F.lit(0.0).alias("delta"))
+        acc = delta
+        for lvl in range(len(levels) - 2, -1, -1):
+            cur = levels[lvl]
+            below = (
+                levels[lvl + 1]
+                .join(delta, ["s", "v"])
                 .select(
-                    F.col("id").alias("s"),
-                    F.col("id").alias("v"),
-                    F.lit(0).alias("d"),
-                    F.lit(1).cast("bigint").alias("sig"),
+                    "s",
+                    F.col("v").alias("_w"),
+                    (F.lit(1.0) + F.col("delta")).alias("_t"),
+                    F.col("sig").alias("_wsig"),
+                )
+            )
+            contrib = (
+                cur.join(adj, cur["v"] == adj["src"])
+                .select("s", "v", "sig", F.col("dst").alias("_w"))
+                .join(below, ["s", "_w"])
+                .groupBy("s", "v")
+                .agg(
+                    F.sum(
+                        F.col("sig")
+                        / F.col("_wsig").cast("double")
+                        * F.col("_t")
+                    ).alias("delta")
+                )
+            )
+            delta = (
+                cur.select("s", "v")
+                .join(contrib, ["s", "v"], "left")
+                .select(
+                    "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
                 )
                 .localCheckpoint()
             )
-            # `levels[d]` holds ONLY level d's rows, checkpointed once;
-            # `visited` is a LAZY union over those frames. The r9 shape
-            # re-checkpointed the full union every level — O(depth·S·V)
-            # checkpoint I/O and block-manager storage for a relation
-            # that is the repo's largest intermediate at 100×. Each row
-            # is now written exactly once (total S·V), the anti-join
-            # reads the same rows either way, and the backward phase
-            # indexes levels directly instead of re-filtering the union.
-            #
-            # NOT fused two-levels-per-job (round 14): advancing level
-            # d+2 inside level d+1's checkpoint job (with the d+1
-            # subtree persisted or recomputed) was implemented and
-            # measured +1.3-2.1 s per entry at sf0.1 in matched-regime
-            # A/Bs — the fused job re-scans the visited union an extra
-            # time and doubles plan depth, which costs more than the
-            # saved job launch, and at scale the fused shape's work is
-            # strictly >= the unfused loop's. One level per job stays.
-            levels = [seed]
-            visited = seed
-            frontier = seed
-            depth = 0
-
-            def _expand(fr, vis, d):
-                return (
-                    fr.join(adj, fr["v"] == adj["src"])
-                    .select("s", F.col("dst").alias("v"), "sig")
-                    .groupBy("s", "v")
-                    .agg(F.sum("sig").alias("sig"))
-                    .join(vis.select("s", "v"), ["s", "v"], "left_anti")
-                    .select("s", "v", F.lit(d).alias("d"), "sig")
-                )
-
-            while depth < max_depth:
-                nxt = _expand(frontier, visited, depth + 1)
-                nxt, row = checkpoint(nxt, F.count(F.lit(1)).alias("m"))
-                if row["m"] == 0:
-                    break
-                frontier = nxt
-                levels.append(nxt)
-                visited = visited.unionByName(nxt)
-                depth += 1
-            # backward: deepest level has no successors -> delta 0
-            delta = frontier.select("s", "v", F.lit(0.0).alias("delta"))
-            acc = delta
-            for lvl in range(depth - 1, -1, -1):
-                cur = levels[lvl]
-                below = (
-                    levels[lvl + 1]
-                    .join(delta, ["s", "v"])
-                    .select(
-                        "s",
-                        F.col("v").alias("_w"),
-                        (F.lit(1.0) + F.col("delta")).alias("_t"),
-                        F.col("sig").alias("_wsig"),
-                    )
-                )
-                contrib = (
-                    cur.join(adj, cur["v"] == adj["src"])
-                    .select("s", "v", "sig", F.col("dst").alias("_w"))
-                    .join(below, ["s", "_w"])
-                    .groupBy("s", "v")
-                    .agg(
-                        F.sum(
-                            F.col("sig")
-                            / F.col("_wsig").cast("double")
-                            * F.col("_t")
-                        ).alias("delta")
-                    )
-                )
-                delta = (
-                    cur.select("s", "v")
-                    .join(contrib, ["s", "v"], "left")
-                    .select(
-                        "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
-                    )
-                    .localCheckpoint()
-                )
-                acc = acc.unionByName(delta)
-            bc = (
-                acc.filter(F.col("v") != F.col("s"))
-                .groupBy(F.col("v").alias("id"))
-                .agg(F.sum("delta").alias("_b"))
+            acc = acc.unionByName(delta)
+        bc = (
+            acc.filter(F.col("v") != F.col("s"))
+            .groupBy(F.col("v").alias("id"))
+            .agg(F.sum("delta").alias("_b"))
+        )
+        # materialize before the persists drop out of scope
+        return (
+            verts.join(bc, "id", "left")
+            .select(
+                "id",
+                F.round(F.coalesce("_b", F.lit(0.0)), 6).alias("bc"),
             )
-            out = (
-                verts.join(bc, "id", "left")
-                .select(
-                    "id",
-                    F.round(F.coalesce("_b", F.lit(0.0)), 6).alias("bc"),
-                )
-            )
-            # materialize before the persists drop out of scope
-            out = out.localCheckpoint()
-        finally:
-            adj.unpersist()
-            verts.unpersist()
-    return out
+            .localCheckpoint()
+        )
 
 
 def betweenness_oracle_sql(
@@ -2399,70 +2356,27 @@ def harmonic_sampled(
     instead of poisoning the sum, so disconnected graphs need no
     special case). Output: (id, harmonic) for every vertex, round 6.
 
-    Same multi-source BFS frontier as :func:`betweenness_sampled`'s
-    forward phase (one (s, v)-keyed join + anti-join per level, all
-    sources at once) — only distances are needed, so σ bookkeeping
-    is dropped and the result is one algebraic aggregate over the
-    visited relation."""
-    sym = symmetrize(edges)
-    with _loop_confs(sym) as sym:
-        adj = sym.repartition("src").persist()
-        verts = adj.select(F.col("src").alias("id")).distinct().persist()
-        try:
-            # seed derived in-plan from verts (no collect/createDataFrame
-            # round trip) — see betweenness_sampled
-            seed = (
-                verts.orderBy("id").limit(n_sources)
-                .select(
-                    F.col("id").alias("s"),
-                    F.col("id").alias("v"),
-                    F.lit(0).alias("d"),
-                )
-                .localCheckpoint()
+    Runs the forward BFS of :func:`betweenness_sampled` —
+    :func:`_bfs_levels`, one (s, v)-keyed join + anti-join per level,
+    all sources at once — and sums ``1/d`` over the union of its
+    levels in one algebraic aggregate; the σ column is unused."""
+    with _loop_adjacency(edges) as adj, _bfs_levels(
+        adj, n_sources, max_depth
+    ) as (verts, levels):
+        h = (
+            reduce(DataFrame.unionByName, levels)
+            .filter(F.col("d") > 0)
+            .groupBy(F.col("v").alias("id"))
+            .agg(F.sum(F.lit(1.0) / F.col("d")).alias("_h"))
+        )
+        return (
+            verts.join(h, "id", "left")
+            .select(
+                "id",
+                F.round(F.coalesce("_h", F.lit(0.0)), 6).alias("harmonic"),
             )
-            # lazy union over once-checkpointed level frames — same
-            # O(depth·S·V) → O(S·V) checkpoint-storage fix as
-            # betweenness_sampled (the two share the frontier shape; the
-            # two-levels-per-job fusion was measured slower there and is
-            # likewise not applied here)
-            visited = seed
-            frontier = seed
-            depth = 0
-
-            def _expand(fr, vis, d):
-                return (
-                    fr.join(adj, fr["v"] == adj["src"])
-                    .select("s", F.col("dst").alias("v"))
-                    .distinct()
-                    .join(vis.select("s", "v"), ["s", "v"], "left_anti")
-                    .withColumn("d", F.lit(d))
-                )
-
-            while depth < max_depth:
-                nxt = _expand(frontier, visited, depth + 1)
-                nxt, row = checkpoint(nxt, F.count(F.lit(1)).alias("m"))
-                if row["m"] == 0:
-                    break
-                frontier = nxt
-                visited = visited.unionByName(nxt)
-                depth += 1
-            h = (
-                visited.filter(F.col("d") > 0)
-                .groupBy(F.col("v").alias("id"))
-                .agg(F.sum(F.lit(1.0) / F.col("d")).alias("_h"))
-            )
-            out = (
-                verts.join(h, "id", "left")
-                .select(
-                    "id",
-                    F.round(F.coalesce("_h", F.lit(0.0)), 6).alias("harmonic"),
-                )
-                .localCheckpoint()
-            )
-        finally:
-            adj.unpersist()
-            verts.unpersist()
-    return out
+            .localCheckpoint()
+        )
 
 
 def harmonic_oracle_sql(
@@ -2538,7 +2452,6 @@ def ppr_multi(
     rank rounded."""
     om = 1.0 - alpha
     with _loop_confs(edges) as ed:
-        spark = ed.sparkSession
         deg = ed.groupBy("src").agg(
             F.count(F.lit(1)).cast("double").alias("_deg")
         )
@@ -2552,15 +2465,19 @@ def ppr_multi(
                 .unionByName(ed.select(F.col("dst").alias("id")))
                 .distinct()
             )
-            sources = [
-                r["id"] for r in verts.orderBy("id").limit(n_sources).collect()
-            ]
-            ranks = spark.createDataFrame(
-                [(s, s, 1.0) for s in sources], "s long, v long, r double"
-            ).localCheckpoint()
-            tele = spark.createDataFrame(
-                [(s, s, om) for s in sources], "s long, v long, r double"
-            ).localCheckpoint()
+            # seed derived in-plan, like _bfs_levels' (no collect +
+            # createDataFrame round trip); the teleport rows are a
+            # projection of the checkpointed seed
+            ranks = (
+                verts.orderBy("id").limit(n_sources)
+                .select(
+                    F.col("id").alias("s"),
+                    F.col("id").alias("v"),
+                    F.lit(1.0).alias("r"),
+                )
+                .localCheckpoint()
+            )
+            tele = ranks.select("s", "v", F.lit(om).alias("r"))
             for it in range(n_iters):
                 spread = (
                     ranks.join(adj, ranks["v"] == adj["src"], "left")

@@ -97,6 +97,34 @@ def test_triangles_direction_and_dup_insensitive(spark):
     assert tri == [(0, 1, 2), (2, 4, 5)]
 
 
+def _random_pairs(n_edges, n_verts, seed):
+    # seeded pseudo-random edge list: duplicates, both orientations
+    # and self-loops arise naturally
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(n_verts), rng.randrange(n_verts))
+        for _ in range(n_edges)
+    ]
+
+
+def test_triangles_match_brute_force_on_random_graph(spark):
+    import itertools
+
+    pairs = _random_pairs(70, 20, seed=7)
+    und = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+    verts = sorted({v for e in und for v in e})
+    want = [
+        (x, y, z)
+        for x, y, z in itertools.combinations(verts, 3)
+        if {(x, y), (y, z), (x, z)} <= und
+    ]
+    assert len(want) == 34  # the graph really has triangles to find
+    got = sorted(tuple(r) for r in GA.triangles(_edges(spark, pairs)).collect())
+    assert got == want
+
+
 def test_luby_mis_invariants(spark):
     edges = _edges(spark, PAIRS)
     mis = {r["id"] for r in GA.luby_mis(edges, seed=99).collect()}
@@ -437,6 +465,36 @@ def test_scc_raises_on_exhausted_bounds(spark):
         GA.scc(path, max_iterations=1)
 
 
+# a 20-vertex chain: CC and SSSP need 19 rounds, Luby more than one;
+# with the chord (0, 2) its 2-core is the triangle {0, 1, 2}, left
+# after 17 one-vertex peel steps
+_CHAIN = [(i, i + 1) for i in range(19)]
+
+
+@pytest.mark.parametrize(
+    "run, pairs, match",
+    [
+        (
+            lambda e: GA.connected_components(e, max_iterations=5),
+            _CHAIN,
+            "max_iterations=5.*connected_components_star",
+        ),
+        (lambda e: GA.sssp(e, max_iterations=3), _CHAIN, "sssp.*=3"),
+        (lambda e: GA.luby_mis(e, max_iterations=1), _CHAIN, "luby_mis.*=1"),
+        (
+            lambda e: GA.kcore(e, k=2, max_iterations=1),
+            _CHAIN + [(0, 2)],
+            "kcore.*=1",
+        ),
+    ],
+    ids=["cc", "sssp", "luby", "kcore"],
+)
+def test_fixed_points_raise_on_exhausted_cap(spark, run, pairs, match):
+    # a capped fixed point must refuse, not return unconverged labels
+    with pytest.raises(RuntimeError, match=match):
+        run(_edges(spark, pairs))
+
+
 def test_scc_shared_vertex_merges_cycles(spark):
     # the PAIRS triangles are directed cycles sharing vertex 2, so
     # {0,1,2,4,5} is ONE component; 6/7/8/9 are singletons; 3 has
@@ -775,6 +833,41 @@ def test_harmonic_hand_computed_and_disconnected(spark):
     assert got[3] == got[0]
     assert got[10] == 0.0 and got[11] == 0.0
     assert set(got) == {0, 1, 2, 3, 10, 11}
+
+
+def test_harmonic_matches_python_bfs_on_random_graph(spark):
+    from collections import deque
+
+    # 26 vertices, 3 unreachable from the sources, BFS depth 8
+    pairs = _random_pairs(30, 30, seed=4)
+    df = spark.createDataFrame(pairs, ["src", "dst"])
+    got = {
+        r["id"]: r["harmonic"]
+        for r in GA.harmonic_sampled(df, n_sources=5).collect()
+    }
+    adj = {}
+    for a, b in pairs:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    verts = sorted(adj)
+    want, depth = dict.fromkeys(verts, 0.0), 0
+    for s in verts[:5]:
+        dist, q = {s: 0}, deque([s])
+        while q:
+            v = q.popleft()
+            for w in adj[v]:
+                if w not in dist:
+                    dist[w] = dist[v] + 1
+                    q.append(w)
+        depth = max(depth, *dist.values())
+        for v, d in dist.items():
+            if d:
+                want[v] += 1.0 / d
+    assert set(got) == set(verts)
+    assert list(want.values()).count(0.0) == 3 and depth == 8
+    for v in verts:
+        assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
 
 
 def test_ppr_multi_matches_numpy_and_conserves_mass(spark):

@@ -3,12 +3,14 @@ checkpoint (session.checkpoint) that every fixed point runs on.
 
 Pins the sizing policy, the restore-on-exit contract (normal exit,
 raise, nesting), that no module outside session.py mutates session
-conf or builds its own Observation, and that a loop which fails
+conf or builds its own Observation, that each graph building block
+in graph/algorithms.py is written once, and that a loop which fails
 mid-iteration releases its caches and restores the conf.
 """
 
 from __future__ import annotations
 
+import ast
 import gc
 import importlib
 import pathlib
@@ -105,6 +107,49 @@ def test_only_session_sets_conf_or_builds_observations():
         if re.search(r"conf\.set\(|Observation\(", line)
     ]
     assert offenders == []
+
+
+def test_graph_building_blocks_exist_once():
+    """Each graph building block is written once in graph/algorithms.py:
+    the cached loop adjacency, the wedge explosion, the multi-source
+    frontier loop, the triangle enumerator and the Louvain sweep."""
+    src = pathlib.Path(algorithms.__file__).read_text()
+    tree = ast.parse(src)
+    funcs = {
+        node.name: node
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+    }
+
+    def flat(text: str) -> str:
+        return re.sub(r"\s+", "", text)
+
+    def calls(name: str) -> set[str]:
+        return {
+            node.func.id
+            for node in ast.walk(funcs[name])
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+        }
+
+    preamble = [
+        name
+        for name, node in funcs.items()
+        if "symmetrize(" in (body := flat(ast.get_source_segment(src, node)))
+        and 'repartition("src").persist()' in body
+    ]
+    assert preamble == ["_loop_adjacency"]
+    assert flat(src).count("F.explode(F.flatten(F.transform(") == 1
+    # the frontier's anti-join against the visited set
+    assert flat(src).count('["s","v"],"left_anti")') == 1
+    for name in ("betweenness_sampled", "harmonic_sampled"):
+        assert "_bfs_levels" in calls(name)
+    assert not any(
+        isinstance(node, (ast.For, ast.While))
+        for node in ast.walk(funcs["harmonic_sampled"])
+    )
+    assert "_louvain_sweep" in calls("louvain_move")
+    assert "_closed_wedges" in calls("triangles") & calls("_edge_support")
+    assert "_wedges" in calls("adamic_adar") & calls("link_prediction")
 
 
 def _persistent_rdds(spark) -> int:
