@@ -88,10 +88,10 @@ def edge_upper(edges: DataFrame) -> DataFrame:
 def _loop_adjacency(edges: DataFrame):
     """The cached adjacency every undirected loop runs against:
     :func:`symmetrize` materialized by :func:`_loop_confs` (so the
-    block runs under the sized loop regime), pre-partitioned on
-    ``src`` — each round's join key, so only the per-vertex side
-    moves — and released on exit, also on raise. The relation is
-    symmetric, so its ``src`` column alone is the vertex set."""
+    block runs under the sized loop regime), hash-partitioned on
+    ``src`` and released on exit, also on raise. The relation is
+    symmetric, so its ``src`` column alone is the vertex set. It stays
+    in place only for a state joined as in :func:`connected_components`."""
     with _loop_confs(symmetrize(edges)) as sym:
         adj = sym.repartition("src").persist()
         try:
@@ -113,8 +113,9 @@ def connected_components(
     the same component representative cc_find converges to
     (oink/cc_find.cpp "zone" = lowest vertex in zone).
 
-    Scale stance: per-round cost is one shuffle join (labels ⋈ edges,
-    edges cached pre-partitioned on src) + one algebraic min — no
+    Scale stance: a round has the plan of a PageRank iteration — the
+    labels, hash-partitioned on id, join the cached adjacency (on src)
+    in place, and the one shuffle is the algebraic min on dst — no
     per-vertex adjacency lists, so power-law hubs stay safe. Rounds =
     component diameter; for 100 TB graphs with giant diameters the
     alternating large-star/small-star algorithm (Kiveris et al.,
@@ -127,31 +128,28 @@ def connected_components(
     :func:`connected_components_star` for long-diameter graphs.
     """
     with _loop_adjacency(edges) as adj:
-        labels = (
-            adj.select(F.col("src").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("comp"))
-            .localCheckpoint()
+        # comp is min(src), not an alias of id: the checkpoint would
+        # record the alias as the partitioning key
+        labels, _ = checkpoint(
+            adj.groupBy(F.col("src").alias("id"))
+            .agg(F.min("src").alias("comp"))
+            .repartition("id")
         )
         for rnd in range(max_iterations):
             # candidate labels flowing along edges: neighbor's comp
+            state = labels.hint("shuffle_hash")
             flowed = (
-                labels.alias("l")
-                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                .groupBy(F.col("e.dst").alias("id"))
-                .agg(F.min(F.col("l.comp")).alias("nbr_comp"))
+                state.join(adj, F.col("id") == F.col("src"))
+                .groupBy(F.col("dst").alias("fid"))
+                .agg(F.min("comp").alias("nbr_comp"))
             )
+            nbr = F.coalesce("nbr_comp", F.col("comp"))
             merged = (
-                labels.alias("o")
-                .join(flowed.alias("f"), F.col("o.id") == F.col("f.id"), "left")
+                state.join(flowed, F.col("id") == F.col("fid"), "left")
                 .select(
-                    F.col("o.id").alias("id"),
-                    F.least(
-                        F.col("o.comp"), F.coalesce("f.nbr_comp", F.col("o.comp"))
-                    ).alias("comp"),
-                    (
-                        F.coalesce("f.nbr_comp", F.col("o.comp")) < F.col("o.comp")
-                    ).alias("changed"),
+                    "id",
+                    F.least("comp", nbr).alias("comp"),
+                    (nbr < F.col("comp")).alias("changed"),
                 )
             )
             # change count observed in-flight on the round's ONE job
@@ -2455,9 +2453,8 @@ def ppr_multi(
         deg = ed.groupBy("src").agg(
             F.count(F.lit(1)).cast("double").alias("_deg")
         )
-        # pre-partitioned on the per-iteration join key, like the
-        # pagerank loop's links relation: only the rank side moves
-        # each iteration
+        # cached and hash-partitioned on the per-iteration join key;
+        # the planner still broadcasts it, once per checkpointed block
         adj = ed.join(deg, "src").repartition("src").persist()
         try:
             verts = (

@@ -26,9 +26,10 @@ Scale design (100 TB stance):
   aggregated directly with an algebraic ``sum`` (map-side partial
   aggregation is automatic), so skewed in-degree stays safe and AQE
   skew handling applies.
-- **Edges cached once, pre-partitioned on the join key** (``src``):
-  the per-iteration ``ranks ⋈ links`` reuses the cached layout; only
-  the (much smaller) rank vector shuffles each iteration.
+- **Co-partitioned iterations**: edges cached once, hash-partitioned
+  on ``src``, and the state ``(id, deg, rank)`` on ``id``; both joins
+  are shuffled-hash joins built on the state, so an iteration's one
+  shuffle is the message aggregate on ``dst``, with no broadcast.
 - **Driver sees scalars only** — three aggregates per iteration
   (diff, sum, dangling-sum); ranks never ``collect()``.
 - **Lineage truncated every iteration** via ``localCheckpoint`` on
@@ -259,32 +260,22 @@ def _pagerank_loop(
     tele_ids = sorted(set(personalize)) if personalize is not None else None
     tele_w = 1.0 / len(tele_ids) if tele_ids else 0.0
     if weight_col is None:
-        deg = out_degrees(edges)
-        link_cols = ["src", "dst", "deg"]
+        links = edges.select("src", "dst")
+        out_weight = F.count(F.lit(1))
+        _contrib = F.col("rank") / F.col("deg")
     else:
         # weighted variant (beyond the reference): deg is the source's
         # total outgoing weight; contributions scale by w/deg. Weights
         # must be positive — a zero-weight-sum source would divide by
         # zero exactly like a phantom dangling vertex.
-        deg = edges.groupBy("src").agg(
-            F.sum(F.col(weight_col).cast("double")).alias("deg")
+        links = edges.select(
+            "src", "dst", F.col(weight_col).cast("double").alias("w")
         )
-        link_cols = ["src", "dst", F.col(weight_col).cast("double").alias("w"), "deg"]
-    # Edge relation with the degree of its source attached, cached and
-    # pre-partitioned on the per-iteration join key.
-    links = (
-        edges.join(deg, "src")
-        .select(*link_cols)
-        .repartition("src")
-        .persist()
-    )
-    # Dense vertex relation with out-degree (0 for dangling), cached.
-    vertices = spark.range(n).select(F.col("id").cast("bigint").alias("id"))
-    vdeg = (
-        vertices.join(deg.withColumnRenamed("src", "id"), "id", "left")
-        .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
-        .persist()
-    )
+        out_weight = F.sum("w")
+        # association mirrors the oracle: rank * w / deg
+        _contrib = F.col("rank") * F.col("w") / F.col("deg")
+    # The edge relation, cached and hash-partitioned on the join key.
+    links = links.repartition("src").persist()
 
     try:
         # init e1: pr[0] = 1 (mr-pr-cpp.cpp:128). Vertex 0's out-degree —
@@ -307,8 +298,17 @@ def _pagerank_loop(
             init_metric = F.sum(
                 F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
             ).alias("dangling0")
+        # The state (id, deg, rank): dense vertices with their out-degree
+        # (0 for dangling), hash-partitioned on id like links on src.
+        deg = links.groupBy(F.col("src").alias("id")).agg(out_weight.alias("deg"))
         pr, init_row = checkpoint(
-            vdeg.select("id", "deg", init_rank.alias("rank")), init_metric
+            spark.range(n)
+            .join(deg, "id", "left")
+            .select(
+                "id", F.coalesce("deg", F.lit(0)).alias("deg"), init_rank.alias("rank")
+            )
+            .repartition("id"),
+            init_metric,
         )
 
         # Pre-loop stats of the init vector: sum = 1 (iteration 0 runs
@@ -331,14 +331,14 @@ def _pagerank_loop(
             # reference does (mr-pr-cpp.cpp:132-138,155).
             norm = 1.0 if iterations == 0 else sum_pr
             one_Av = alpha * dangling_pr / n
-            _h = alpha * F.coalesce(F.col("c.h_raw"), F.lit(0.0)) / norm
+            _h = alpha * F.coalesce(F.col("h_raw"), F.lit(0.0)) / norm
             if tele_ids is None:
                 _new_rank = _h + one_Av + one_Iv
             else:
                 # dangling + teleport mass both flow to the seed set; the
                 # association order mirrors the oracle's SQL exactly
                 _tele = (
-                    F.when(F.col("q.id").isin(tele_ids), F.lit(tele_w))
+                    F.when(F.col("id").isin(tele_ids), F.lit(tele_w))
                     .otherwise(F.lit(0.0))
                 )
                 _new_rank = (
@@ -347,26 +347,19 @@ def _pagerank_loop(
 
             # h[i] = sum_{j -> i} old[j]/outdeg[j]; normalization is a
             # scalar, so it is applied after the aggregate (h_raw / norm).
-            # Qualified aliases throughout: contribs is derived from pr, so
-            # the merge below is a self-join from the analyzer's view.
-            if weight_col is None:
-                _contrib = F.col("p.rank") / F.col("l.deg")
-            else:
-                # association mirrors the oracle: rank * w / deg
-                _contrib = F.col("p.rank") * F.col("l.w") / F.col("l.deg")
+            # no DataFrame.alias on the state: see session.checkpoint
+            state = pr.hint("shuffle_hash")
             contribs = (
-                pr.alias("p")
-                .join(links.alias("l"), F.col("p.id") == F.col("l.src"))
-                .groupBy(F.col("l.dst").alias("cid"))
+                state.join(links, F.col("id") == F.col("src"))
+                .groupBy(F.col("dst").alias("cid"))
                 .agg(F.sum(_contrib).alias("h_raw"))
             )
             merged = (
-                pr.alias("q")
-                .join(contribs.alias("c"), F.col("q.id") == F.col("c.cid"), "left")
+                state.join(contribs, F.col("id") == F.col("cid"), "left")
                 .select(
-                    F.col("q.id").alias("id"),
-                    F.col("q.deg").alias("deg"),
-                    (F.col("q.rank") / norm).alias("old_rank"),
+                    "id",
+                    "deg",
+                    (F.col("rank") / norm).alias("old_rank"),
                     _new_rank.alias("new_rank"),
                 )
             )
@@ -392,7 +385,6 @@ def _pagerank_loop(
             iterations += 1
     finally:
         links.unpersist()
-        vdeg.unpersist()
     return PageRankResult(
         ranks=pr.select("id", "rank"),
         iterations=iterations,

@@ -8548,8 +8548,8 @@ def _textrank_topk(
     )
     va = vocab.select(F.col("word").alias("a"), F.col("wid").alias("_sa"))
     vb = vocab.select(F.col("word").alias("b"), F.col("wid").alias("_sb"))
-    # eager checkpoint: pagerank's pre-loop runs three actions over
-    # edges (edge count, websize, the links persist) before the loop.
+    # eager checkpoint: pagerank reads edges in two jobs (the size
+    # probe, and the init that fills its links cache).
     # Both orientations come from ONE explode over the joined rows —
     # the previous unionAll of two projections evaluated the
     # cnt⋈va⋈vb subtree twice inside the checkpoint job (same rows,

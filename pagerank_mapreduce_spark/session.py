@@ -141,7 +141,14 @@ def checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, Row]:
     """Materialize ``df`` with an eager ``localCheckpoint`` and return
     it with ``metrics`` (aggregate Columns) observed on that same job:
     one job per loop iteration, lineage truncated, scalars only to the
-    driver."""
+    driver; with no metrics the Row is empty. The result keeps ``df``'s
+    hash partitioning, but a state read through ``DataFrame.alias`` and
+    self-joined loses it: the renewed scan keeps the old attribute
+    (output ``id#346``, ``hashpartitioning(id#13, 4)``), as does a key
+    checkpointed as an alias (``F.col("q.id").alias("id")``), and the
+    planner shuffles the state again every round."""
+    if not metrics:
+        return df.localCheckpoint(), Row()
     obs = Observation()
     df = df.observe(obs, *metrics).localCheckpoint()
     return df, obs.get

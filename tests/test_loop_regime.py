@@ -4,8 +4,10 @@ checkpoint (session.checkpoint) that every fixed point runs on.
 Pins the sizing policy, the restore-on-exit contract (normal exit,
 raise, nesting), that no module outside session.py mutates session
 conf or builds its own Observation, that each graph building block
-in graph/algorithms.py is written once, and that a loop which fails
-mid-iteration releases its caches and restores the conf.
+in graph/algorithms.py is written once, that a loop which fails
+mid-iteration releases its caches and restores the conf, and that
+every PageRank iteration and connected-components round runs the
+co-partitioned plan: one Exchange, no broadcast.
 """
 
 from __future__ import annotations
@@ -22,6 +24,13 @@ import pytest
 import pagerank_mapreduce_spark
 from pagerank_mapreduce_spark import session
 from pagerank_mapreduce_spark.graph import algorithms
+from pagerank_mapreduce_spark.graph.rmat import rmat_edges
+from pagerank_mapreduce_spark.plans.audit import (
+    _final_tree,
+    exchange_count,
+    formatted_plan,
+    join_strategies,
+)
 from pagerank_mapreduce_spark.session import loop_regime
 
 # the package re-exports the pagerank FUNCTION under the module's name
@@ -208,3 +217,75 @@ def test_loop_failure_releases_caches_and_conf(spark, monkeypatch, module, run):
     assert len(calls) == 2
     assert (spark.conf.get(AQE), spark.conf.get(PARTS)) == conf_before
     assert _persistent_rdds(spark) == rdds_before
+
+
+def _live_ops(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator) per line of the plan's operator tree, without
+    the subtrees of cached relations: those ran once, when the cache
+    was filled, not in the round whose plan this is."""
+    tree = _final_tree(plan).split("== Physical Plan ==")[-1]
+    ops, cut = [], None
+    for line in tree.strip().splitlines():
+        marker = re.search(r"[+:]- ", line)
+        depth = marker.start() if marker else 0
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        ops.append((depth, re.sub(r"^[\s:+\-*]*", "", line)))
+    return ops
+
+
+@pytest.fixture(scope="module")
+def rmat_small(spark):
+    return rmat_edges(spark, scale=8, edge_factor=8, seed=1, n_tasks=2).localCheckpoint()
+
+
+@pytest.mark.parametrize(
+    "module, run, skip",
+    [
+        (pagerank_mod, lambda e: pagerank_mod.pagerank(e, max_iterations=3), 1),
+        (
+            pagerank_mod,
+            lambda e: pagerank_mod.pagerank(e, max_iterations=3, personalize=[0, 1]),
+            1,
+        ),
+        (
+            pagerank_mod,
+            lambda e: pagerank_mod.pagerank(
+                e.withColumn("w", (e.src % 3 + 1).cast("double")),
+                max_iterations=3,
+                weight_col="w",
+            ),
+            1,
+        ),
+        # the adjacency's row count, then the labels' init
+        (algorithms, lambda e: algorithms.connected_components(e), 2),
+    ],
+    ids=["pagerank", "personalized", "weighted", "connected_components"],
+)
+def test_rounds_are_co_partitioned(rmat_small, monkeypatch, module, run, skip):
+    """Past the init, every round joins the state (hash-partitioned on
+    id) with the cached adjacency (hash-partitioned on src) without
+    moving either, and shuffles only the messages: one Exchange, on the
+    partial aggregate, and no broadcast of the adjacency."""
+    plans = []
+    real = session.checkpoint
+
+    def capture(df, *metrics):
+        plans.append(formatted_plan(df))
+        return real(df, *metrics)
+
+    monkeypatch.setattr(module, "checkpoint", capture)
+    run(rmat_small)
+    rounds = plans[skip:]
+    assert len(rounds) >= 3
+    for plan in rounds:
+        ops = _live_ops(plan)
+        live = "\n".join(f"{' ' * d}{op}" for d, op in ops)
+        assert exchange_count(live) == 1, live
+        assert "BroadcastExchange" not in live, live
+        assert join_strategies(live) == {"ShuffledHashJoin": 2}, live
+        # the one Exchange sits on the partial aggregate of the
+        # messages, so neither the state nor the adjacency is shuffled
+        (i,) = [i for i, (_, op) in enumerate(ops) if op.startswith("Exchange")]
+        assert ops[i + 1][1].startswith("HashAggregate"), live
