@@ -17,7 +17,10 @@ Spark-first:
   fixed point that exhausts its ``max_iterations`` cap raises
   ``RuntimeError`` instead of returning an unconverged result.
 - each building block exists once: :func:`_loop_adjacency` owns the
-  cached symmetric adjacency of every undirected loop and its release,
+  cached adjacency of every vertex loop and its release,
+  :func:`_messages` the message round (PageRank, HITS, CC, SCC, SSSP,
+  core numbers, label propagation), :func:`_min_fixed_point` the
+  min-label fixed point on it (CC, SCC's forward coloring, SSSP),
   :func:`_bfs_levels` the multi-source BFS (betweenness, harmonic),
   :func:`_oriented` / :func:`_closed_wedges` the degree-ordered
   triangle enumeration (triangles, k-truss support), :func:`_wedges`
@@ -85,19 +88,84 @@ def edge_upper(edges: DataFrame) -> DataFrame:
 
 
 @contextmanager
-def _loop_adjacency(edges: DataFrame):
-    """The cached adjacency every undirected loop runs against:
-    :func:`symmetrize` materialized by :func:`_loop_confs` (so the
-    block runs under the sized loop regime), hash-partitioned on
-    ``src`` and released on exit, also on raise. The relation is
-    symmetric, so its ``src`` column alone is the vertex set. It stays
-    in place only for a state joined as in :func:`connected_components`."""
-    with _loop_confs(symmetrize(edges)) as sym:
-        adj = sym.repartition("src").persist()
+def _loop_adjacency(edges: DataFrame, directed: bool = False):
+    """The cached adjacency every vertex loop runs against:
+    :func:`symmetrize` (``edges`` as they are if ``directed``)
+    materialized by :func:`_loop_confs` (so the block runs under the
+    sized loop regime), hash-partitioned on ``src`` and released on
+    exit, also on raise. A symmetric relation's ``src`` column alone
+    is the vertex set. It stays in place only for a state joined
+    through :func:`_messages`."""
+    with _loop_confs(edges if directed else symmetrize(edges)) as rel:
+        adj = rel.repartition("src").persist()
         try:
             yield adj
         finally:
             adj.unpersist()
+
+
+def _messages(
+    state: DataFrame, adj: DataFrame, *aggs: Column, by=(), along=("src", "dst")
+) -> DataFrame:
+    """One message round of a vertex loop: every ``state`` row (keyed
+    ``id``) sends along each of its ``adj`` edges ``along[0] →
+    along[1]``, and the messages are reduced per receiver into
+    ``(mid, *by, *aggs)`` — the map / collate / reduce of the PageRank
+    kernel (mr-pr-cpp.cpp:110-180).
+
+    With the state hash-partitioned on ``id`` and ``adj`` cached
+    hash-partitioned on ``along[0]``, the join is a shuffled-hash join
+    built on the state that moves neither side, and the round's one
+    shuffle is the partial aggregate of the messages. The state must
+    not reach here through ``DataFrame.alias``, nor with its key
+    checkpointed through one (``F.col("q.id").alias("id")``): the
+    renewed scan then keeps the old attribute (output ``id#346``,
+    ``hashpartitioning(id#13, 4)``) and the planner shuffles or
+    broadcasts again every round."""
+    src, dst = along
+    return (
+        state.hint("shuffle_hash")
+        .join(adj, F.col("id") == F.col(src))
+        .groupBy(F.col(dst).alias("mid"), *by)
+        .agg(*aggs)
+    )
+
+
+def _min_fixed_point(
+    state: DataFrame,
+    adj: DataFrame,
+    col: str,
+    msg: Column,
+    max_iterations: int,
+    error: str,
+) -> DataFrame:
+    """Least fixed point of ``state`` ``(id, col)``: each round every
+    vertex whose ``col`` is set sends ``msg`` along its ``adj`` edges
+    and keeps the least of its value and the messages it receives (a
+    null ``col`` is unreached: it sends nothing and takes any message).
+    The round's change count is observed on its one checkpoint job;
+    the loop returns at the first round without a change and raises
+    ``RuntimeError(error)`` when ``max_iterations`` rounds all
+    changed."""
+    for _ in range(max_iterations):
+        flowed = _messages(
+            state.filter(F.col(col).isNotNull()), adj, F.min(msg).alias("nbr")
+        )
+        new = F.least(col, "nbr")
+        merged = (
+            state.hint("shuffle_hash")
+            .join(flowed, F.col("id") == F.col("mid"), "left")
+            .select(
+                "id", new.alias(col), (~F.col(col).eqNullSafe(new)).alias("changed")
+            )
+        )
+        merged, row = checkpoint(
+            merged, F.sum(F.col("changed").cast("int")).alias("n")
+        )
+        state = merged.select("id", col)
+        if not row["n"]:
+            return state
+    raise RuntimeError(error)
 
 
 # ------------------------------------------------ connected components
@@ -135,37 +203,16 @@ def connected_components(
             .agg(F.min("src").alias("comp"))
             .repartition("id")
         )
-        for rnd in range(max_iterations):
-            # candidate labels flowing along edges: neighbor's comp
-            state = labels.hint("shuffle_hash")
-            flowed = (
-                state.join(adj, F.col("id") == F.col("src"))
-                .groupBy(F.col("dst").alias("fid"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            nbr = F.coalesce("nbr_comp", F.col("comp"))
-            merged = (
-                state.join(flowed, F.col("id") == F.col("fid"), "left")
-                .select(
-                    "id",
-                    F.least("comp", nbr).alias("comp"),
-                    (nbr < F.col("comp")).alias("changed"),
-                )
-            )
-            # change count observed in-flight on the round's ONE job
-            merged, row = checkpoint(
-                merged, F.sum(F.col("changed").cast("int")).alias("n")
-            )
-            labels = merged.select("id", "comp")
-            if not row["n"]:
-                break
-        else:
-            raise RuntimeError(
-                "connected_components: labels still changing after "
-                f"max_iterations={max_iterations} rounds; raise the cap "
-                "or use connected_components_star for long-diameter graphs"
-            )
-    return labels
+        return _min_fixed_point(
+            labels,
+            adj,
+            "comp",
+            F.col("comp"),
+            max_iterations,
+            "connected_components: labels still changing after "
+            f"max_iterations={max_iterations} rounds; raise the cap "
+            "or use connected_components_star for long-diameter graphs",
+        )
 
 
 def connected_components_star(
@@ -605,59 +652,41 @@ def sssp(
     vertices; ``max_distance`` filters the result (and bounds the
     oracle's recursion), it does not change computed distances.
 
-    Per-round cost: one join (dists ⋈ edges, edges cached
-    pre-partitioned on src) + min-agg + merge — same shape, same
-    skew-safety argument as the PageRank iteration. Rounds ≤ the
+    Per round, the distances of the reached vertices flow through
+    :func:`_min_fixed_point` — the connected-components round, with
+    ``dist + w`` as the message. The state holds every vertex that can
+    be reached at all (the source and every edge target), ``dist``
+    null until reached, so it stays hash-partitioned on ``id`` and the
+    round's one shuffle is the min on ``dst``. Rounds ≤ the
     shortest-path hop diameter.
     """
     w_edges = edges.select(
         "src", "dst", edge_weight_expr("src", "dst").alias("w")
     )
-    with loop_regime(w_edges.sparkSession, w_edges.count()):
-        adj = w_edges.repartition("src").persist()
-        try:
-            dists = (
-                adj.sparkSession.range(1)
-                .select(
-                    F.lit(source).cast("bigint").alias("id"),
-                    F.lit(0).cast("bigint").alias("dist"),
+    with _loop_adjacency(w_edges, directed=True) as adj:
+        dists, _ = checkpoint(
+            adj.select(F.col("dst").alias("id"))
+            .unionAll(
+                adj.sparkSession.range(1).select(
+                    F.lit(source).cast("bigint").alias("id")
                 )
-                .localCheckpoint()
             )
-            for rnd in range(max_iterations):
-                relaxed = (
-                    dists.alias("d")
-                    .join(adj.alias("e"), F.col("d.id") == F.col("e.src"))
-                    .groupBy(F.col("e.dst").alias("id"))
-                    .agg(F.min(F.col("d.dist") + F.col("e.w")).alias("cand"))
-                )
-                merged = (
-                    dists.alias("o")
-                    .join(relaxed.alias("r"), F.col("o.id") == F.col("r.id"), "full")
-                    .select(
-                        F.coalesce(F.col("o.id"), F.col("r.id")).alias("id"),
-                        # least() skips nulls: min over whichever side exists
-                        F.least(F.col("o.dist"), F.col("r.cand")).alias("dist"),
-                        (
-                            F.col("o.dist").isNull()
-                            | (F.coalesce(F.col("r.cand"), F.col("o.dist")) < F.col("o.dist"))
-                        ).alias("changed"),
-                    )
-                )
-                # change count observed in-flight on the round's ONE job
-                merged, row = checkpoint(
-                    merged, F.sum(F.col("changed").cast("int")).alias("n")
-                )
-                dists = merged.select("id", "dist")
-                if not row["n"]:
-                    break
-            else:
-                raise RuntimeError(
-                    "sssp: distances still improving after "
-                    f"max_iterations={max_iterations} rounds"
-                )
-        finally:
-            adj.unpersist()
+            .distinct()
+            .select(
+                "id",
+                F.when(F.col("id") == source, F.lit(0).cast("bigint")).alias("dist"),
+            )
+            .repartition("id")
+        )
+        dists = _min_fixed_point(
+            dists,
+            adj,
+            "dist",
+            F.col("dist") + F.col("w"),
+            max_iterations,
+            "sssp: distances still improving after "
+            f"max_iterations={max_iterations} rounds",
+        ).filter(F.col("dist").isNotNull())
     if max_distance is not None:
         dists = dists.filter(F.col("dist") <= max_distance)
     return dists
@@ -831,17 +860,17 @@ def label_propagation(
     standard answer. Returns (id, comm).
 
     Beyond-reference extension of the OINK graph suite. Scale shape:
-    per round, one shuffle join (labels ⋈ cached edges) and two
-    algebraic aggregations — the per-(vertex, label) count, then the
-    winner via ``max(struct(n, -label))``, which partial-aggregates
-    map-side; no window, no per-vertex label list. Hubs are big
-    groups, not big rows."""
+    per round, one :func:`_messages` round counting the messages per
+    (vertex, label), then the winner via ``max(struct(n, -label))``;
+    both aggregations partial-aggregate map-side and are the round's
+    two shuffles — the labels stay in place, the cached adjacency is
+    never broadcast, no window, no per-vertex label list. Hubs are
+    big groups, not big rows."""
     with _loop_adjacency(edges) as adj:
-        labels = (
-            adj.select(F.col("src").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("lbl"))
-            .localCheckpoint()
+        labels, _ = checkpoint(
+            adj.groupBy(F.col("src").alias("id"))
+            .agg(F.min("src").alias("lbl"))
+            .repartition("id")
         )
         prev = None
         for r in range(rounds):
@@ -850,26 +879,21 @@ def label_propagation(
                 # recompute above the latest checkpoint when the
                 # probe below consumes it a second time
                 prev = labels
-            cnt = (
-                labels.alias("l")
-                .join(adj.alias("e"), F.col("l.id") == F.col("e.src"))
-                .groupBy(
-                    F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl")
-                )
-                .agg(F.count("*").alias("n"))
-            )
-            best = cnt.groupBy("id").agg(
+            cnt = _messages(labels, adj, F.count("*").alias("n"), by=["lbl"])
+            best = cnt.groupBy("mid").agg(
                 F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
                     "b"
                 )
             )
-            labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
+            labels = best.select(
+                F.col("mid").alias("id"), (-F.col("b.nl")).alias("lbl")
+            )
             # fixed rounds need no per-round convergence probe, so
             # two rounds share each checkpoint job (measured best of
             # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
             # deeper fusion loses to plan depth, same curve as kcore)
             if (r + 1) % 2 == 0 or r == rounds - 1:
-                labels = labels.localCheckpoint()
+                labels, _ = checkpoint(labels)
         if info is not None:
             changed = rounds  # no-rounds edge: vacuously converged
             if prev is not None:
@@ -940,30 +964,30 @@ def core_numbers(
     not see; raise the cap, the fixture graphs converge in 6–8).
     Returns (id, core).
 
-    Scale shape per round: one shuffle join (values ⋈ cached
-    adjacency) and one groupBy whose H-index is computed from the
+    Scale shape per round: one :func:`_messages` round (the values
+    stay in place, the cached adjacency is never broadcast, the one
+    shuffle is the aggregate) whose H-index is computed from the
     desc-sorted neighbor-value array as ``max_i min(c_(i), i+1)`` —
     a hub of degree d carries a d-element array exactly like the
     wedge generators, never a window over the whole graph."""
     with _loop_adjacency(edges) as adj:
-        c = (
+        c, _ = checkpoint(
             adj.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint()
+            .repartition("id")
         )
         h_of = F.array_max(
             F.transform(
-                F.sort_array(F.collect_list("cn"), asc=False),
+                F.sort_array(F.collect_list("c"), asc=False),
                 lambda x, i: F.least(x, i + F.lit(1)),
             )
         )
         prev_sum = None
         rounds_used, converged = rounds, False
         for r in range(rounds):
-            nb = c.alias("l").join(
-                adj.alias("e"), F.col("l.id") == F.col("e.src")
-            ).select(F.col("e.dst").alias("id"), F.col("l.c").alias("cn"))
-            c = nb.groupBy("id").agg(h_of.alias("c"))
+            c = _messages(c, adj, h_of.alias("c")).select(
+                F.col("mid").alias("id"), "c"
+            )
             if (r + 1) % 2 == 0 or r == rounds - 1:
                 c, row = checkpoint(c, F.sum("c").alias("s"))
                 s = row["s"]
@@ -1030,9 +1054,11 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     that end up edge-free are their own singleton SCCs).
 
     Scale stance: every step is the house iterative shape — equi-join
-    frontier to the cached edge relation + algebraic min / exists
+    frontier to the materialized edge relation + algebraic min / exists
     aggregation, one fused job per inner round via observed
-    localCheckpoints; never an adjacency list, never a transitive
+    localCheckpoints (the forward coloring is the connected-components
+    round, :func:`_min_fixed_point` on the directed edges); never an
+    adjacency list, never a transitive
     closure (the ORACLE does closure — O(n·reach) — precisely because
     the engine must not). Round counts: forward coloring is bounded
     by remaining diameter, confirmation by SCC diameter, outer rounds
@@ -1054,60 +1080,37 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    with _loop_confs(e0) as E:
-        spark = E.sparkSession
-        V = (
+    # E, hash-partitioned on src, is the forward coloring's adjacency;
+    # each outer round checkpoints its remainder the same way
+    with _loop_adjacency(e0, directed=True) as E:
+        V, row = checkpoint(
             E.select(F.col("src").alias("id"))
             .unionAll(E.select(F.col("dst").alias("id")))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            F.count(F.lit(1)).alias("n"),
         )
+        # V is E's endpoint set: both are empty or neither is
+        n_edges = row["n"]
         results = []
         for _outer in range(max_iterations):
-            if E.rdd.isEmpty():
+            if not n_edges:
                 results.append(
                     V.select("id", F.col("id").alias("scc"))
                 )
                 break
-            # 1. forward min-label fixed point
-            c = V.select("id", F.col("id").alias("c"))
-            changed = 0
-            for _ in range(max_iterations):
-                upd = (
-                    c.alias("s")
-                    .join(E.alias("e"), F.col("s.id") == F.col("e.src"))
-                    .groupBy(F.col("e.dst").alias("id"))
-                    .agg(F.min(F.col("s.c")).alias("cin"))
-                )
-                c2 = (
-                    c.alias("x")
-                    .join(upd.alias("u"), "id", "left")
-                    .select(
-                        "id",
-                        F.least(
-                            F.col("c"), F.coalesce("cin", F.col("c"))
-                        ).alias("c"),
-                        (F.coalesce("cin", F.col("c")) < F.col("c")).alias(
-                            "_chg"
-                        ),
-                    )
-                )
-                c2, row = checkpoint(
-                    c2, F.sum(F.col("_chg").cast("long")).alias("n")
-                )
-                changed = row["n"]
-                c = c2.select("id", "c")
-                if not changed:
-                    break
-            if changed:
-                # an unconverged coloring could assign two different
-                # colors inside one SCC and silently split it across
-                # outer rounds — refuse to emit a wrong labeling
-                raise RuntimeError(
-                    "scc: forward coloring did not converge within "
-                    f"max_iterations={max_iterations}; raise the bound "
-                    "(rounds are bounded by the remaining diameter)"
-                )
+            # 1. forward min-label fixed point; an unconverged coloring
+            # could assign two different colors inside one SCC and
+            # silently split it across outer rounds, so it raises
+            c = _min_fixed_point(
+                V.select("id", F.col("id").alias("c")),
+                E,
+                "c",
+                F.col("c"),
+                max_iterations,
+                "scc: forward coloring did not converge within "
+                f"max_iterations={max_iterations}; raise the bound "
+                "(rounds are bounded by the remaining diameter)",
+            )
             # 2. backward confirmation within color classes
             st = c.select("id", "c", (F.col("id") == F.col("c")).alias("m"))
             st = st.localCheckpoint()
@@ -1154,15 +1157,19 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                 "id", F.col("c").alias("scc")
             )
             results.append(found.localCheckpoint())
-            V = st.filter(~F.col("m")).select("id").localCheckpoint()
-            E = (
+            V, row = checkpoint(
+                st.filter(~F.col("m")).select("id"), F.count(F.lit(1)).alias("n")
+            )
+            if not row["n"]:
+                break
+            E, row = checkpoint(
                 E.join(V.withColumnRenamed("id", "src"), "src", "semi")
                 .join(V.withColumnRenamed("id", "dst"), "dst", "semi")
                 .select("src", "dst")
-                .localCheckpoint()
+                .repartition("src"),
+                F.count(F.lit(1)).alias("n"),
             )
-            if V.rdd.isEmpty():
-                break
+            n_edges = row["n"]
         else:
             # the for-loop exhausted without the break: vertices remain
             # unemitted, so the labeling would be PARTIAL — refuse

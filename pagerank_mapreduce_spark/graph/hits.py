@@ -27,9 +27,10 @@ Scale design (100 TB stance) — mirrors graph/pagerank.py:
   never a ``collect_list``.
 - **Edges cached twice, each copy pre-partitioned on its half-step's
   join key** (``src`` for the authority step, ``dst`` for the hub
-  step): only the O(n) score vector shuffles per iteration, the O(m)
-  edge relation never moves after the one-time layout. The 2x edge
-  memory is the explicit price for zero edge shuffles in-loop.
+  step): each half-step is a ``graph.algorithms._messages`` round, so
+  only the O(n) score messages shuffle per iteration and the O(m)
+  edge relation is neither moved nor broadcast after the one-time
+  layout. The 2x edge memory is the explicit price.
 - **One job per iteration** (plus one final authority job): the fused
   a-then-h plan materializes via ``localCheckpoint`` with the L1
   normalizer observed in-flight; the driver sees scalars only.
@@ -45,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_mapreduce_spark.graph.algorithms import _messages
 from pagerank_mapreduce_spark.graph.pagerank import _graph_size
 from pagerank_mapreduce_spark.session import checkpoint, loop_regime
 
@@ -137,28 +139,23 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
     # the end instead of via two dense left-joins per iteration.
     def a_step(hub: DataFrame) -> DataFrame:
         """ar[d] = sum over in-edges of hub[s] (dst-support only)."""
-        return (
-            hub.alias("h")
-            .join(by_src.alias("e"), F.col("h.id") == F.col("e.src"))
-            .groupBy(F.col("e.dst").alias("id"))
-            .agg(F.sum(F.col("h.hub")).alias("a_raw"))
+        return _messages(hub, by_src, F.sum("hub").alias("a_raw")).select(
+            F.col("mid").alias("id"), "a_raw"
         )
 
     hub = (
         spark.range(n)
         .select(F.col("id").cast("bigint").alias("id"), F.lit(1.0).alias("hub"))
+        .repartition("id")
     )
     try:
         for it in range(iterations):
             # fused a-then-h plan: ONE checkpoint job, normalizer
             # observed in-flight, division applied lazily below
-            a = a_step(hub)
-            h = (
-                a.alias("a")
-                .join(by_dst.alias("e"), F.col("a.id") == F.col("e.dst"))
-                .groupBy(F.col("e.src").alias("id"))
-                .agg(F.sum(F.col("a.a_raw")).alias("h_raw"))
-            )
+            h = _messages(
+                a_step(hub), by_dst, F.sum("a_raw").alias("h_raw"),
+                along=("dst", "src"),
+            ).select(F.col("mid").alias("id"), "h_raw")
             h, row = checkpoint(h, F.sum("h_raw").alias("s"))
             raw = row["s"]
             # None: empty support relation (sum over zero rows);

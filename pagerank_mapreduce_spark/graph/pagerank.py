@@ -27,9 +27,11 @@ Scale design (100 TB stance):
   aggregation is automatic), so skewed in-degree stays safe and AQE
   skew handling applies.
 - **Co-partitioned iterations**: edges cached once, hash-partitioned
-  on ``src``, and the state ``(id, deg, rank)`` on ``id``; both joins
-  are shuffled-hash joins built on the state, so an iteration's one
-  shuffle is the message aggregate on ``dst``, with no broadcast.
+  on ``src``, and the state ``(id, deg, rank)`` on ``id``; the
+  contributions are one ``graph.algorithms._messages`` round, the
+  message round of every vertex loop, and the merge joins them back
+  the same way, so an iteration's one shuffle is the message
+  aggregate on ``dst``, with no broadcast.
 - **Driver sees scalars only** — three aggregates per iteration
   (diff, sum, dangling-sum); ranks never ``collect()``.
 - **Lineage truncated every iteration** via ``localCheckpoint`` on
@@ -45,6 +47,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_mapreduce_spark.graph.algorithms import _messages
 from pagerank_mapreduce_spark.session import checkpoint, loop_regime
 
 ALPHA = 0.85  # mr-pr-cpp.cpp:11
@@ -347,15 +350,10 @@ def _pagerank_loop(
 
             # h[i] = sum_{j -> i} old[j]/outdeg[j]; normalization is a
             # scalar, so it is applied after the aggregate (h_raw / norm).
-            # no DataFrame.alias on the state: see session.checkpoint
-            state = pr.hint("shuffle_hash")
-            contribs = (
-                state.join(links, F.col("id") == F.col("src"))
-                .groupBy(F.col("dst").alias("cid"))
-                .agg(F.sum(_contrib).alias("h_raw"))
-            )
+            contribs = _messages(pr, links, F.sum(_contrib).alias("h_raw"))
             merged = (
-                state.join(contribs, F.col("id") == F.col("cid"), "left")
+                pr.hint("shuffle_hash")
+                .join(contribs, F.col("id") == F.col("mid"), "left")
                 .select(
                     "id",
                     "deg",

@@ -142,11 +142,8 @@ def checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, Row]:
     it with ``metrics`` (aggregate Columns) observed on that same job:
     one job per loop iteration, lineage truncated, scalars only to the
     driver; with no metrics the Row is empty. The result keeps ``df``'s
-    hash partitioning, but a state read through ``DataFrame.alias`` and
-    self-joined loses it: the renewed scan keeps the old attribute
-    (output ``id#346``, ``hashpartitioning(id#13, 4)``), as does a key
-    checkpointed as an alias (``F.col("q.id").alias("id")``), and the
-    planner shuffles the state again every round."""
+    hash partitioning (for the pitfalls of a loop state, see
+    ``graph.algorithms._messages``)."""
     if not metrics:
         return df.localCheckpoint(), Row()
     obs = Observation()

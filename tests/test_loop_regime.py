@@ -6,8 +6,8 @@ raise, nesting), that no module outside session.py mutates session
 conf or builds its own Observation, that each graph building block
 in graph/algorithms.py is written once, that a loop which fails
 mid-iteration releases its caches and restores the conf, and that
-every PageRank iteration and connected-components round runs the
-co-partitioned plan: one Exchange, no broadcast.
+every vertex loop's message round runs the co-partitioned plan: the
+state stays in place, every join is shuffled-hash, no broadcast.
 """
 
 from __future__ import annotations
@@ -33,8 +33,10 @@ from pagerank_mapreduce_spark.plans.audit import (
 )
 from pagerank_mapreduce_spark.session import loop_regime
 
-# the package re-exports the pagerank FUNCTION under the module's name
+# the package re-exports the pagerank and hits FUNCTIONS under the
+# modules' names
 pagerank_mod = importlib.import_module("pagerank_mapreduce_spark.graph.pagerank")
+hits_mod = importlib.import_module("pagerank_mapreduce_spark.graph.hits")
 
 AQE = "spark.sql.adaptive.enabled"
 PARTS = "spark.sql.shuffle.partitions"
@@ -118,16 +120,25 @@ def test_only_session_sets_conf_or_builds_observations():
     assert offenders == []
 
 
+def _top_level_functions(module) -> tuple[str, dict[str, ast.FunctionDef]]:
+    src = pathlib.Path(module.__file__).read_text()
+    return src, {
+        node.name: node
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+
+
 def test_graph_building_blocks_exist_once():
     """Each graph building block is written once in graph/algorithms.py:
-    the cached loop adjacency, the wedge explosion, the multi-source
-    frontier loop, the triangle enumerator and the Louvain sweep."""
-    src = pathlib.Path(algorithms.__file__).read_text()
-    tree = ast.parse(src)
-    funcs = {
-        node.name: node
-        for node in tree.body
-        if isinstance(node, ast.FunctionDef)
+    the cached loop adjacency, the message round and the min-label
+    fixed point on it, the wedge explosion, the multi-source frontier
+    loop, the triangle enumerator and the Louvain sweep."""
+    src, funcs = _top_level_functions(algorithms)
+    loops = {
+        **funcs,
+        **_top_level_functions(pagerank_mod)[1],
+        **_top_level_functions(hits_mod)[1],
     }
 
     def flat(text: str) -> str:
@@ -136,7 +147,7 @@ def test_graph_building_blocks_exist_once():
     def calls(name: str) -> set[str]:
         return {
             node.func.id
-            for node in ast.walk(funcs[name])
+            for node in ast.walk(loops[name])
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
         }
 
@@ -159,6 +170,45 @@ def test_graph_building_blocks_exist_once():
     assert "_louvain_sweep" in calls("louvain_move")
     assert "_closed_wedges" in calls("triangles") & calls("_edge_support")
     assert "_wedges" in calls("adamic_adar") & calls("link_prediction")
+    for name in ("connected_components", "scc", "sssp"):
+        assert "_min_fixed_point" in calls(name), name
+    for name in ("_pagerank_loop", "_hits_loop", "core_numbers", "label_propagation"):
+        assert "_messages" in calls(name), name
+
+
+def test_hinted_adjacency_join_only_in_message_round():
+    """A state hinted ``shuffle_hash`` joins the adjacency only inside
+    _messages; every other hinted join in graph/ takes the messages
+    that _messages returned."""
+    root = pathlib.Path(algorithms.__file__).parent
+    hinted = []
+    for path in sorted(root.glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            messages = {
+                target.id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and getattr(node.value.func, "id", None) == "_messages"
+                for target in node.targets
+                if isinstance(target, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "join"
+                    and isinstance(node.func.value, ast.Call)
+                    and isinstance(node.func.value.func, ast.Attribute)
+                    and node.func.value.func.attr == "hint"
+                ):
+                    continue
+                other = node.args[0]
+                if not (isinstance(other, ast.Name) and other.id in messages):
+                    hinted.append((fn.name, ast.unparse(other)))
+    assert hinted == [("_messages", "adj")]
 
 
 def _persistent_rdds(spark) -> int:
@@ -202,8 +252,11 @@ def _fail_second_checkpoint(monkeypatch, module):
     [
         (pagerank_mod, lambda e: pagerank_mod.pagerank(e)),
         (algorithms, lambda e: algorithms.connected_components(e)),
+        (algorithms, lambda e: algorithms.sssp(e)),
+        (algorithms, lambda e: algorithms.scc(e)),
+        (hits_mod, lambda e: hits_mod.hits(e)),
     ],
-    ids=["pagerank", "connected_components"],
+    ids=["pagerank", "connected_components", "sssp", "scc", "hits"],
 )
 def test_loop_failure_releases_caches_and_conf(spark, monkeypatch, module, run):
     edges = spark.createDataFrame(
@@ -240,48 +293,59 @@ def rmat_small(spark):
     return rmat_edges(spark, scale=8, edge_factor=8, seed=1, n_tasks=2).localCheckpoint()
 
 
-@pytest.mark.parametrize(
-    "module, run, skip",
-    [
-        (pagerank_mod, lambda e: pagerank_mod.pagerank(e, max_iterations=3), 1),
-        (
-            pagerank_mod,
-            lambda e: pagerank_mod.pagerank(e, max_iterations=3, personalize=[0, 1]),
-            1,
-        ),
-        (
-            pagerank_mod,
-            lambda e: pagerank_mod.pagerank(
-                e.withColumn("w", (e.src % 3 + 1).cast("double")),
-                max_iterations=3,
-                weight_col="w",
-            ),
-            1,
-        ),
-        # the adjacency's row count, then the labels' init
-        (algorithms, lambda e: algorithms.connected_components(e), 2),
-    ],
-    ids=["pagerank", "personalized", "weighted", "connected_components"],
-)
-def test_rounds_are_co_partitioned(rmat_small, monkeypatch, module, run, skip):
-    """Past the init, every round joins the state (hash-partitioned on
-    id) with the cached adjacency (hash-partitioned on src) without
-    moving either, and shuffles only the messages: one Exchange, on the
-    partial aggregate, and no broadcast of the adjacency."""
+class _Enough(Exception):
+    pass
+
+
+def _round_plans(monkeypatch, module, run, edges, skip, n):
+    """The live operators of ``n`` rounds' checkpoint plans past the
+    first ``skip`` checkpoints; the loop is stopped at the last one."""
     plans = []
     real = session.checkpoint
 
     def capture(df, *metrics):
         plans.append(formatted_plan(df))
+        if len(plans) == skip + n:
+            raise _Enough
         return real(df, *metrics)
 
     monkeypatch.setattr(module, "checkpoint", capture)
-    run(rmat_small)
-    rounds = plans[skip:]
-    assert len(rounds) >= 3
-    for plan in rounds:
-        ops = _live_ops(plan)
-        live = "\n".join(f"{' ' * d}{op}" for d, op in ops)
+    with pytest.raises(_Enough):
+        run(edges)
+    return [_live_ops(plan) for plan in plans[skip:]]
+
+
+def _render(ops: list[tuple[int, str]]) -> str:
+    return "\n".join(f"{' ' * d}{op}" for d, op in ops)
+
+
+@pytest.mark.parametrize(
+    "module, run, skip",
+    [
+        (pagerank_mod, lambda e: pagerank_mod.pagerank(e), 1),
+        (pagerank_mod, lambda e: pagerank_mod.pagerank(e, personalize=[0, 1]), 1),
+        (
+            pagerank_mod,
+            lambda e: pagerank_mod.pagerank(
+                e.withColumn("w", (e.src % 3 + 1).cast("double")), weight_col="w"
+            ),
+            1,
+        ),
+        # the adjacency's row count, then the init
+        (algorithms, lambda e: algorithms.connected_components(e), 2),
+        (algorithms, lambda e: algorithms.sssp(e), 2),
+        # the edges' row count, then the vertices: forward rounds follow
+        (algorithms, lambda e: algorithms.scc(e), 2),
+    ],
+    ids=["pagerank", "personalized", "weighted", "connected_components", "sssp", "scc"],
+)
+def test_rounds_are_co_partitioned(rmat_small, monkeypatch, module, run, skip):
+    """Past the init, every round joins the state (hash-partitioned on
+    id) with the adjacency (hash-partitioned on src) without moving
+    either, and shuffles only the messages: one Exchange, on the
+    partial aggregate, and no broadcast of the adjacency."""
+    for ops in _round_plans(monkeypatch, module, run, rmat_small, skip, 3):
+        live = _render(ops)
         assert exchange_count(live) == 1, live
         assert "BroadcastExchange" not in live, live
         assert join_strategies(live) == {"ShuffledHashJoin": 2}, live
@@ -289,3 +353,30 @@ def test_rounds_are_co_partitioned(rmat_small, monkeypatch, module, run, skip):
         # messages, so neither the state nor the adjacency is shuffled
         (i,) = [i for i, (_, op) in enumerate(ops) if op.startswith("Exchange")]
         assert ops[i + 1][1].startswith("HashAggregate"), live
+
+
+@pytest.mark.parametrize(
+    "module, run, skip, exchanges",
+    [
+        # the first iteration also hash-partitions the initial hubs
+        (hits_mod, lambda e: hits_mod.hits(e), 1, 2),
+        # two rounds per checkpoint; the adjacency's row count and the
+        # init come first
+        (algorithms, lambda e: algorithms.core_numbers(e), 2, 2),
+        (algorithms, lambda e: algorithms.label_propagation(e), 2, 4),
+    ],
+    ids=["hits", "core_numbers", "label_propagation"],
+)
+def test_message_rounds_never_broadcast(
+    rmat_small, monkeypatch, module, run, skip, exchanges
+):
+    """The loops whose messages are the next state: every join is a
+    shuffled-hash join, nothing is broadcast, and the only Exchanges
+    are the message aggregates (hits: one per half-step; core numbers:
+    one per round; label propagation: the (vertex, label) count and
+    the winner per round)."""
+    for ops in _round_plans(monkeypatch, module, run, rmat_small, skip, 2):
+        live = _render(ops)
+        assert exchange_count(live) == exchanges, live
+        assert "BroadcastExchange" not in live, live
+        assert set(join_strategies(live)) == {"ShuffledHashJoin"}, live
