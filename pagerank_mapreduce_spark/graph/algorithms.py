@@ -89,32 +89,46 @@ def edge_upper(edges: DataFrame) -> DataFrame:
 
 @contextmanager
 def _loop_adjacency(edges: DataFrame, directed: bool = False):
-    """The cached adjacency every vertex loop runs against:
-    :func:`symmetrize` (``edges`` as they are if ``directed``)
-    materialized by :func:`_loop_confs` (so the block runs under the
-    sized loop regime), hash-partitioned on ``src`` and released on
-    exit, also on raise. A symmetric relation's ``src`` column alone
-    is the vertex set. It stays in place only for a state joined
-    through :func:`_messages`."""
-    with _loop_confs(edges if directed else symmetrize(edges)) as rel:
-        adj = rel.repartition("src").persist()
-        try:
-            yield adj
-        finally:
-            adj.unpersist()
+    """The cached adjacency every vertex loop runs against,
+    hash-partitioned on ``src`` under the loop regime sized to its row
+    count, and released on exit, also on raise: :func:`symmetrize`,
+    materialized by :func:`_loop_confs` (a symmetric relation's
+    ``src`` column alone is the vertex set), or ``edges`` as they are
+    if ``directed``. A directed loop holds one cached copy of its
+    edges: they are cached and counted in one job, laid out on ``src``
+    in a second, and the first cache is dropped. It stays in place
+    only for a state joined through :func:`_messages`."""
+    if not directed:
+        with _loop_confs(symmetrize(edges)) as rel:
+            adj = rel.repartition("src").persist()
+            try:
+                yield adj
+            finally:
+                adj.unpersist()
+        return
+    rel = edges.persist()
+    try:
+        with loop_regime(rel.sparkSession, rel.count()):
+            adj = rel.repartition("src").persist()
+            try:
+                adj.count()
+                rel.unpersist()
+                yield adj
+            finally:
+                adj.unpersist()
+    finally:
+        rel.unpersist()
 
 
-def _messages(
-    state: DataFrame, adj: DataFrame, *aggs: Column, by=(), along=("src", "dst")
-) -> DataFrame:
+def _messages(state: DataFrame, adj: DataFrame, *aggs: Column, by=()) -> DataFrame:
     """One message round of a vertex loop: every ``state`` row (keyed
-    ``id``) sends along each of its ``adj`` edges ``along[0] →
-    along[1]``, and the messages are reduced per receiver into
-    ``(mid, *by, *aggs)`` — the map / collate / reduce of the PageRank
-    kernel (mr-pr-cpp.cpp:110-180).
+    ``id``) sends along each of its ``adj`` edges ``src → dst``, and
+    the messages are reduced per receiver into ``(id, *by, *aggs)`` —
+    the map / collate / reduce of the PageRank kernel
+    (mr-pr-cpp.cpp:110-180).
 
-    With the state hash-partitioned on ``id`` and ``adj`` cached
-    hash-partitioned on ``along[0]``, the join is a shuffled-hash join
+    With the state hash-partitioned on ``id`` and ``adj``
+    hash-partitioned on ``src``, the join is a shuffled-hash join
     built on the state that moves neither side, and the round's one
     shuffle is the partial aggregate of the messages. The state must
     not reach here through ``DataFrame.alias``, nor with its key
@@ -122,11 +136,10 @@ def _messages(
     renewed scan then keeps the old attribute (output ``id#346``,
     ``hashpartitioning(id#13, 4)``) and the planner shuffles or
     broadcasts again every round."""
-    src, dst = along
     return (
         state.hint("shuffle_hash")
-        .join(adj, F.col("id") == F.col(src))
-        .groupBy(F.col(dst).alias("mid"), *by)
+        .join(adj, F.col("id") == F.col("src"))
+        .groupBy(F.col("dst").alias("id"), *by)
         .agg(*aggs)
     )
 
@@ -138,26 +151,31 @@ def _min_fixed_point(
     msg: Column,
     max_iterations: int,
     error: str,
+    grow: bool = False,
 ) -> DataFrame:
     """Least fixed point of ``state`` ``(id, col)``: each round every
-    vertex whose ``col`` is set sends ``msg`` along its ``adj`` edges
-    and keeps the least of its value and the messages it receives (a
-    null ``col`` is unreached: it sends nothing and takes any message).
-    The round's change count is observed on its one checkpoint job;
-    the loop returns at the first round without a change and raises
-    ``RuntimeError(error)`` when ``max_iterations`` rounds all
-    changed."""
+    vertex sends ``msg`` along its ``adj`` edges and keeps the least of
+    its value and the messages it receives. With ``grow``, a vertex
+    that a message reaches joins the state (SSSP seeds only its
+    source): the state and the messages, both hash-partitioned on
+    ``id``, are unioned and reduced in place; otherwise the messages
+    are joined onto the state. The round's change count is observed on
+    its one checkpoint job; the loop returns at the first round without
+    a change and raises ``RuntimeError(error)`` when ``max_iterations``
+    rounds all changed."""
     for _ in range(max_iterations):
-        flowed = _messages(
-            state.filter(F.col(col).isNotNull()), adj, F.min(msg).alias("nbr")
-        )
-        new = F.least(col, "nbr")
-        merged = (
-            state.hint("shuffle_hash")
-            .join(flowed, F.col("id") == F.col("mid"), "left")
-            .select(
-                "id", new.alias(col), (~F.col(col).eqNullSafe(new)).alias("changed")
+        flowed = _messages(state, adj, F.min(msg).alias("nbr"))
+        if grow:
+            merged = (
+                state.unionByName(flowed, allowMissingColumns=True)
+                .groupBy("id")
+                .agg(F.min(col).alias(col), F.min("nbr").alias("nbr"))
             )
+        else:
+            merged = state.hint("shuffle_hash").join(flowed, "id", "left")
+        new = F.least(col, "nbr")
+        merged = merged.select(
+            "id", new.alias(col), (~F.col(col).eqNullSafe(new)).alias("changed")
         )
         merged, row = checkpoint(
             merged, F.sum(F.col("changed").cast("int")).alias("n")
@@ -654,39 +672,30 @@ def sssp(
 
     Per round, the distances of the reached vertices flow through
     :func:`_min_fixed_point` — the connected-components round, with
-    ``dist + w`` as the message. The state holds every vertex that can
-    be reached at all (the source and every edge target), ``dist``
-    null until reached, so it stays hash-partitioned on ``id`` and the
-    round's one shuffle is the min on ``dst``. Rounds ≤ the
-    shortest-path hop diameter.
+    ``dist + w`` as the message. The state starts as the source alone
+    and grows by the vertices the messages reach, so the join's build
+    side and the merge hold only reached vertices; it stays
+    hash-partitioned on ``id`` and the round's one shuffle is the min
+    on ``dst``. Rounds ≤ the shortest-path hop diameter.
     """
     w_edges = edges.select(
         "src", "dst", edge_weight_expr("src", "dst").alias("w")
     )
     with _loop_adjacency(w_edges, directed=True) as adj:
-        dists, _ = checkpoint(
-            adj.select(F.col("dst").alias("id"))
-            .unionAll(
-                adj.sparkSession.range(1).select(
-                    F.lit(source).cast("bigint").alias("id")
-                )
-            )
-            .distinct()
-            .select(
-                "id",
-                F.when(F.col("id") == source, F.lit(0).cast("bigint")).alias("dist"),
-            )
-            .repartition("id")
-        )
+        # the source's one row needs no checkpoint job: the first
+        # round hash-partitions it on the range's own id column
         dists = _min_fixed_point(
-            dists,
+            adj.sparkSession.range(source, source + 1)
+            .withColumn("dist", F.lit(0).cast("bigint"))
+            .repartition("id"),
             adj,
             "dist",
             F.col("dist") + F.col("w"),
             max_iterations,
             "sssp: distances still improving after "
             f"max_iterations={max_iterations} rounds",
-        ).filter(F.col("dist").isNotNull())
+            grow=True,
+        )
     if max_distance is not None:
         dists = dists.filter(F.col("dist") <= max_distance)
     return dists
@@ -880,14 +889,12 @@ def label_propagation(
                 # probe below consumes it a second time
                 prev = labels
             cnt = _messages(labels, adj, F.count("*").alias("n"), by=["lbl"])
-            best = cnt.groupBy("mid").agg(
+            best = cnt.groupBy("id").agg(
                 F.max(F.struct(F.col("n"), (-F.col("lbl")).alias("nl"))).alias(
                     "b"
                 )
             )
-            labels = best.select(
-                F.col("mid").alias("id"), (-F.col("b.nl")).alias("lbl")
-            )
+            labels = best.select("id", (-F.col("b.nl")).alias("lbl"))
             # fixed rounds need no per-round convergence probe, so
             # two rounds share each checkpoint job (measured best of
             # 1.56/1.49/1.59 s for every-1/2/4 at the catalog scale —
@@ -985,9 +992,7 @@ def core_numbers(
         prev_sum = None
         rounds_used, converged = rounds, False
         for r in range(rounds):
-            c = _messages(c, adj, h_of.alias("c")).select(
-                F.col("mid").alias("id"), "c"
-            )
+            c = _messages(c, adj, h_of.alias("c"))
             if (r + 1) % 2 == 0 or r == rounds - 1:
                 c, row = checkpoint(c, F.sum("c").alias("s"))
                 s = row["s"]
@@ -1083,21 +1088,13 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     # E, hash-partitioned on src, is the forward coloring's adjacency;
     # each outer round checkpoints its remainder the same way
     with _loop_adjacency(e0, directed=True) as E:
-        V, row = checkpoint(
+        V, _ = checkpoint(
             E.select(F.col("src").alias("id"))
             .unionAll(E.select(F.col("dst").alias("id")))
-            .distinct(),
-            F.count(F.lit(1)).alias("n"),
+            .distinct()
         )
-        # V is E's endpoint set: both are empty or neither is
-        n_edges = row["n"]
         results = []
         for _outer in range(max_iterations):
-            if not n_edges:
-                results.append(
-                    V.select("id", F.col("id").alias("scc"))
-                )
-                break
             # 1. forward min-label fixed point; an unconverged coloring
             # could assign two different colors inside one SCC and
             # silently split it across outer rounds, so it raises
@@ -1169,7 +1166,10 @@ def scc(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
                 .repartition("src"),
                 F.count(F.lit(1)).alias("n"),
             )
-            n_edges = row["n"]
+            if not row["n"]:
+                # no edge left: every remaining vertex is its own SCC
+                results.append(V.select("id", F.col("id").alias("scc")))
+                break
         else:
             # the for-loop exhausted without the break: vertices remain
             # unemitted, so the labeling would be PARTIAL — refuse

@@ -26,11 +26,11 @@ Scale design (100 TB stance) — mirrors graph/pagerank.py:
   aggregates (map-side partial agg; AQE-safe under in-degree skew) —
   never a ``collect_list``.
 - **Edges cached twice, each copy pre-partitioned on its half-step's
-  join key** (``src`` for the authority step, ``dst`` for the hub
-  step): each half-step is a ``graph.algorithms._messages`` round, so
-  only the O(n) score messages shuffle per iteration and the O(m)
-  edge relation is neither moved nor broadcast after the one-time
-  layout. The 2x edge memory is the explicit price.
+  sender** (the edges for the authority step, the reversed edges for
+  the hub step): each half-step is a ``graph.algorithms._messages``
+  round, so only the O(n) score messages shuffle per iteration and
+  the O(m) edge relation is neither moved nor broadcast after the
+  one-time layout. The 2x edge memory is the explicit price.
 - **One job per iteration** (plus one final authority job): the fused
   a-then-h plan materializes via ``localCheckpoint`` with the L1
   normalizer observed in-flight; the driver sees scalars only.
@@ -126,11 +126,16 @@ def hits(
 
 
 def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
-    # One cached copy per half-step, pre-partitioned on that step's
-    # join key — the vector (O(n)) shuffles per iteration, the edges
-    # (O(m)) never do after this layout.
-    by_src = edges.select("src", "dst").repartition("src").persist()
-    by_dst = edges.select("src", "dst").repartition("dst").persist()
+    # One cached copy per half-step, each pre-partitioned on its
+    # sender: the edges for the authority step, the reversed edges for
+    # the hub step — the vector (O(n)) shuffles per iteration, the
+    # edges (O(m)) never do after this layout.
+    fwd = edges.select("src", "dst").repartition("src").persist()
+    rev = (
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        .repartition("src")
+        .persist()
+    )
 
     # The loop works on the SUPPORT only (hub lives on src vertices,
     # auth on dst vertices): vertices outside a sum's support hold
@@ -139,9 +144,7 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
     # the end instead of via two dense left-joins per iteration.
     def a_step(hub: DataFrame) -> DataFrame:
         """ar[d] = sum over in-edges of hub[s] (dst-support only)."""
-        return _messages(hub, by_src, F.sum("hub").alias("a_raw")).select(
-            F.col("mid").alias("id"), "a_raw"
-        )
+        return _messages(hub, fwd, F.sum("hub").alias("a_raw"))
 
     hub = (
         spark.range(n)
@@ -152,10 +155,7 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
         for it in range(iterations):
             # fused a-then-h plan: ONE checkpoint job, normalizer
             # observed in-flight, division applied lazily below
-            h = _messages(
-                a_step(hub), by_dst, F.sum("a_raw").alias("h_raw"),
-                along=("dst", "src"),
-            ).select(F.col("mid").alias("id"), "h_raw")
+            h = _messages(a_step(hub), rev, F.sum("a_raw").alias("h_raw"))
             h, row = checkpoint(h, F.sum("h_raw").alias("s"))
             raw = row["s"]
             # None: empty support relation (sum over zero rows);
@@ -172,8 +172,8 @@ def _hits_loop(spark, edges: DataFrame, n: int, iterations: int) -> DataFrame:
         sa = float(row["s"])
         auth = a.select("id", (F.col("a_raw") / F.lit(sa)).alias("auth"))
     finally:
-        by_src.unpersist()
-        by_dst.unpersist()
+        fwd.unpersist()
+        rev.unpersist()
     # densify: every vertex 0..n-1 appears, zeros outside each support
     verts = spark.range(n).select(F.col("id").cast("bigint").alias("id"))
     return (

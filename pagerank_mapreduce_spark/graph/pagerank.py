@@ -353,7 +353,7 @@ def _pagerank_loop(
             contribs = _messages(pr, links, F.sum(_contrib).alias("h_raw"))
             merged = (
                 pr.hint("shuffle_hash")
-                .join(contribs, F.col("id") == F.col("mid"), "left")
+                .join(contribs, "id", "left")
                 .select(
                     "id",
                     "deg",

@@ -279,8 +279,10 @@ def _live_ops(plan: str) -> list[tuple[int, str]]:
     tree = _final_tree(plan).split("== Physical Plan ==")[-1]
     ops, cut = [], None
     for line in tree.strip().splitlines():
+        # a line without a branch marker (the plan under an
+        # AdaptiveSparkPlan's "== Final Plan ==") sits at its indent
         marker = re.search(r"[+:]- ", line)
-        depth = marker.start() if marker else 0
+        depth = marker.start() if marker else len(line) - len(line.lstrip())
         if cut is not None and depth > cut:
             continue
         cut = depth if "InMemoryRelation" in line else None
@@ -297,21 +299,26 @@ class _Enough(Exception):
     pass
 
 
-def _round_plans(monkeypatch, module, run, edges, skip, n):
-    """The live operators of ``n`` rounds' checkpoint plans past the
-    first ``skip`` checkpoints; the loop is stopped at the last one."""
+def _round_plans(monkeypatch, module, run, edges, skip, n=None):
+    """The live operators of the checkpoint plans past the first
+    ``skip``: of ``n`` rounds, the loop stopped at the last one, or
+    (``n=None``) of every round of a run to completion, at least 3."""
     plans = []
     real = session.checkpoint
 
     def capture(df, *metrics):
         plans.append(formatted_plan(df))
-        if len(plans) == skip + n:
+        if n is not None and len(plans) == skip + n:
             raise _Enough
         return real(df, *metrics)
 
     monkeypatch.setattr(module, "checkpoint", capture)
-    with pytest.raises(_Enough):
+    if n is None:
         run(edges)
+        assert len(plans) >= skip + 3
+    else:
+        with pytest.raises(_Enough):
+            run(edges)
     return [_live_ops(plan) for plan in plans[skip:]]
 
 
@@ -320,35 +327,57 @@ def _render(ops: list[tuple[int, str]]) -> str:
 
 
 @pytest.mark.parametrize(
-    "module, run, skip",
+    "module, run, skip, n, joins",
     [
-        (pagerank_mod, lambda e: pagerank_mod.pagerank(e), 1),
-        (pagerank_mod, lambda e: pagerank_mod.pagerank(e, personalize=[0, 1]), 1),
+        (
+            pagerank_mod,
+            lambda e: pagerank_mod.pagerank(e, max_iterations=3),
+            1,
+            None,
+            2,
+        ),
+        (
+            pagerank_mod,
+            lambda e: pagerank_mod.pagerank(e, max_iterations=3, personalize=[0, 1]),
+            1,
+            None,
+            2,
+        ),
         (
             pagerank_mod,
             lambda e: pagerank_mod.pagerank(
-                e.withColumn("w", (e.src % 3 + 1).cast("double")), weight_col="w"
+                e.withColumn("w", (e.src % 3 + 1).cast("double")),
+                max_iterations=3,
+                weight_col="w",
             ),
             1,
+            None,
+            2,
         ),
-        # the adjacency's row count, then the init
-        (algorithms, lambda e: algorithms.connected_components(e), 2),
-        (algorithms, lambda e: algorithms.sssp(e), 2),
-        # the edges' row count, then the vertices: forward rounds follow
-        (algorithms, lambda e: algorithms.scc(e), 2),
+        # the adjacency's row count, then the init; every round up to
+        # and including the converging one
+        (algorithms, lambda e: algorithms.connected_components(e), 2, None, 2),
+        # past the first round, which also hash-partitions the source's
+        # row; sssp's growing state takes the messages by a union
+        # reduced in place, not a second join
+        (algorithms, lambda e: algorithms.sssp(e), 1, 3, 1),
+        # the vertices come first; forward rounds follow
+        (algorithms, lambda e: algorithms.scc(e), 1, 3, 2),
     ],
     ids=["pagerank", "personalized", "weighted", "connected_components", "sssp", "scc"],
 )
-def test_rounds_are_co_partitioned(rmat_small, monkeypatch, module, run, skip):
+def test_rounds_are_co_partitioned(
+    rmat_small, monkeypatch, module, run, skip, n, joins
+):
     """Past the init, every round joins the state (hash-partitioned on
     id) with the adjacency (hash-partitioned on src) without moving
     either, and shuffles only the messages: one Exchange, on the
     partial aggregate, and no broadcast of the adjacency."""
-    for ops in _round_plans(monkeypatch, module, run, rmat_small, skip, 3):
+    for ops in _round_plans(monkeypatch, module, run, rmat_small, skip, n):
         live = _render(ops)
         assert exchange_count(live) == 1, live
         assert "BroadcastExchange" not in live, live
-        assert join_strategies(live) == {"ShuffledHashJoin": 2}, live
+        assert join_strategies(live) == {"ShuffledHashJoin": joins}, live
         # the one Exchange sits on the partial aggregate of the
         # messages, so neither the state nor the adjacency is shuffled
         (i,) = [i for i, (_, op) in enumerate(ops) if op.startswith("Exchange")]
